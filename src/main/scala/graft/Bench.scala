@@ -25,11 +25,11 @@ import org.apache.spark.sql.SparkSession
   * One contended single-shot capture made round 3 look 2× slower than
   * reruns — reporting both walls makes that failure mode visible in
   * the snapshot itself. `value` stays the cold wall (comparable to
-  * prior rounds); `wall` (the LAST field, which survives driver tail
-  * truncation) is the warm wall; the per-query map on the JSON line is
-  * the WARM pass. Per-query numbers are latencies under concurrency
-  * (they inflate with queueing — compare plan shapes, not these,
-  * across concurrency settings).
+  * prior rounds); `wall` is the warm wall, repeated as the last field
+  * `wall_tail` so it survives a capture that clips the tail; the
+  * per-query map on the JSON line is the WARM pass. Per-query numbers
+  * are latencies under concurrency (they inflate with queueing —
+  * compare plan shapes, not these, across concurrency settings).
   *
   * Self-diagnostics ride the line: `probes` are the parse-only
   * q49/q53 timings over pre-materialized payload parquet (engine cost
@@ -48,19 +48,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val b = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.scheduler.mode", "FAIR")
-      .config("spark.ui.enabled", "false")
-    // same hook as QProbe/StageProbe: on a row-group-bounded twin dir
-    // (Amplify arg 4) shrink scan splits so the scan floors fan out —
-    // meaningless on the harness's single-row-group files
-    sys.env.get("GRAFT_MAX_PART_BYTES").foreach(v =>
-      b.config("spark.sql.files.maxPartitionBytes", v))
-    val spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session("spark.scheduler.mode" -> "FAIR")
     // Session warmup: executor threads, codegen compiler, parquet
     // footer reads — so init cost isn't billed to the first query.
     spark.range(1000).selectExpr("sum(id)").collect()
@@ -334,21 +322,16 @@ object Bench {
     // materialize the payload parquet once, then time parse+flatten
     // alone — the engine cost a 100 TB deployment actually pays. Run in
     // a FRESH SparkSession: round 7's in-suite probes read 6.7-10s for
-    // q53_parse vs 1.58s solo (QProbe, same code/data) — two suite
-    // passes leave the session hot with catalog entries, the reliable-
+    // q53_parse vs 1.58s solo (same code/data) — two suite passes
+    // leave the session hot with catalog entries, the reliable-
     // checkpoint dir's ContextCleaner churn, and cached/evicted blocks,
     // and the probes inherited all of it. A fresh session measures the
-    // engine, matching what QProbe reports. Second (warm) run is the
-    // number. Failure-isolated (-1, never a lost line): a probe crash
+    // engine, matching what a solo probe reports. Second (warm) run is
+    // the number. Failure-isolated (-1, never a lost line): a probe crash
     // must not discard two completed suite passes.
     val probes: Seq[(String, Double)] =
       try {
-        val ps = SparkSession.builder()
-          .master(s"local[$cpus]")
-          .config("spark.sql.shuffle.partitions", cpus)
-          .config("spark.ui.enabled", "false")
-          .getOrCreate()
-        ps.sparkContext.setLogLevel("WARN")
+        val ps = Harness.session()
         try {
           ParseProbes.prepare(ps, sfDir, ParseProbes.names).toSeq.sortBy(_._1)
             .map { case (name, fn) =>
@@ -382,10 +365,10 @@ object Bench {
     // per-query map): ALL contract fields — value/wall_cold/wall/cal/
     // contended/... — lead the object and the bulky per-query map goes
     // last, so a clipped capture costs per-query detail, never the
-    // headline. `wall` is ALSO repeated as the very last field (same
-    // value, duplicate JSON keys parse last-wins identically) because
-    // the r3-era driver clipped the HEAD instead — either truncation
-    // direction now keeps the headline.
-    println(s"""{"metric":"total","value":${f3(wallCold)},"unit":"sec","pass":"warm","wall_cold":${f3(wallCold)},"wall":${f3(wallWarm)},"cal":${f3(cal)},"ext_cores":${f3(ext)},"io_stall":${f3(io)},"contended":$contended,"retries":$retries,"sf":"$sfDir","errors":$errs,"probes":$probesJson,"queries":${fmt(warm)},"wall":${f3(wallWarm)}}""")
+    // headline. The warm wall is ALSO repeated as the very last field,
+    // `wall_tail` (a distinct key: strict JSON parsers reject duplicate
+    // keys), because r3-era captures clipped the HEAD instead —
+    // either truncation direction now keeps the headline.
+    println(s"""{"metric":"total","value":${f3(wallCold)},"unit":"sec","pass":"warm","wall_cold":${f3(wallCold)},"wall":${f3(wallWarm)},"cal":${f3(cal)},"ext_cores":${f3(ext)},"io_stall":${f3(io)},"contended":$contended,"retries":$retries,"sf":"$sfDir","errors":$errs,"probes":$probesJson,"queries":${fmt(warm)},"wall_tail":${f3(wallWarm)}}""")
   }
 }

@@ -9,7 +9,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * probes materialize the scaffold ONCE to parquet and expose the
   * parse+flatten stage over that cached input, so hot-query triage
   * measures the engine, not the generator. Reported by Bench under
-  * `probes` and runnable one-off via QProbe (same names).
+  * `probes` and runnable one-off via `graft.Probe time` (same names).
   */
 object ParseProbes {
 
@@ -17,7 +17,7 @@ object ParseProbes {
 
   /** Materialize the scaffold payloads under a temp dir and return the
     * parse-only frame factories keyed by probe name. Only the REQUESTED
-    * probes' payloads are built — QProbe asks for one, Bench for all. */
+    * probes' payloads are built — Probe asks for some, Bench for all. */
   def prepare(s: SparkSession, sfDir: String,
       which: Seq[String] = names): Map[String, () => DataFrame] = {
     val dir = java.nio.file.Files.createTempDirectory("graft_payloads").toString

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -16,11 +15,7 @@ object ScaleSmoke {
   def main(args: Array[String]): Unit = {
     val rows = if (args.nonEmpty) args(0).toLong else 10000000L
     val only = if (args.length > 1) Some(args(1)) else None
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session("spark.sql.shuffle.partitions" -> "64")
     def gen(hot: Double) = spark.read.format("graft-ticks")
       .option("rows", rows.toString).option("partitions", "64")
       .option("hotfraction", hot.toString).load()
@@ -201,9 +196,7 @@ object ScaleSmoke {
     // ≈995k), with each batch touching only its collision buckets
     val incRoot = java.nio.file.Files.createTempDirectory("graft_incsc").toString
     time("incremental dedup 3 batches 1M") {
-      // bucketedIndex: the production layout (zero-exchange index side;
-      // IncScale isolates the layout comparison incl. the
-      // beyond-broadcast regime where the difference lives)
+      // bucketedIndex: the production layout (zero-exchange index side)
       (0 until 3).foreach { i =>
         operators.IncrementalDedup.upsertBatch(
           docsBig.filter(pmod(col("doc_id"), lit(3)) === i), incRoot,

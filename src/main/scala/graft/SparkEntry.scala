@@ -1431,7 +1431,7 @@ object SparkEntry {
     * with identical embeddings) break on c_id / vec_id exactly like
     * the engine. */
   private val D61Sql: String = {
-    import Vec64Sql.{dot, sq, col}
+    import Vec64Sql.{dot, col}
     val dims = graft.operators.Retrieval.EmbedDims
     val ec = dot(col("v.x"), col("c.c"))
     s"""WITH RECURSIVE $D59Ctes,
@@ -1551,7 +1551,7 @@ object SparkEntry {
   /** The d72 k-NN-graph oracle: the d61 preamble (d59 unit weights →
     * pivoted vectors → k-means replay), blk top-2 anchor probes +
     * top-2 candidate assignments (candAssign=2, the r20 knee default —
-    * RecallSweep's measured curve), pivot-exact pair cosines, and the
+    * the measured sweep in Similarity), pivot-exact pair cosines, and the
     * (cos DESC, id ASC) ROW_NUMBER top-k the engine's TopKByScore is
     * row-for-row equal to. */
   /** Shared d72 CTE chain — the d59 self-embedding preamble, the

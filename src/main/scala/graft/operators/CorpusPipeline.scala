@@ -200,7 +200,7 @@ object CorpusPipeline {
           Curation.contaminatedIds(pruned0.select("doc_id", "text"),
             // lazy cut: the bench scrub + gram explode + distinct
             // otherwise re-run inside the broadcast branch (measured
-            // ~0.7 s of the 10× decon stage — StageProbe decon mode)
+            // ~0.7 s of the 10× decon stage)
             benchmarkGrams(b).localCheckpoint(eager = false)),
           Seq("doc_id"), "left_anti"))
       case None => pruned

@@ -361,13 +361,6 @@ object IncrementalDedup {
     def bandBucket: org.apache.spark.sql.Column =
       if (bucketedIndex) pmod(hash(joinKey.map(col): _*), lit(buckets))
       else pmod(col("band_hash"), lit(buckets))
-    val dbg = sys.env.contains("GRAFT_INC_DEBUG")
-    var t0 = System.nanoTime()
-    def lap(tag: String): Unit = if (dbg) {
-      val t = System.nanoTime()
-      println(f"[inc] $tag%-14s ${(t - t0) / 1e9}%6.2f s")
-      t0 = t
-    }
 
     // ---- restart guard: docs/ is the membership authority ----------
     // Frames to release once the batch is fully persisted. Per-cycle
@@ -423,14 +416,12 @@ object IncrementalDedup {
         fresh0.join(seen, Seq("doc_id"), "left_anti")
       }
 
-    lap("guard")
     // lazy cut + count in ONE action (an eager localCheckpoint runs an
     // internal count() and discards it; the old eager-then-isEmpty was
     // two jobs per cycle for the same answer)
     val toks = Dedup.lshTokens(fresh, blockCols).localCheckpoint(eager = false)
     toRelease += toks
     if (toks.count() == 0) { toRelease.foreach(_.unpersist()); return }
-    lap("toks")
     // one action materializes the banded cut AND collects both numbers
     // the rest of the cycle needs from it: the row count (the
     // write-guard that used to be a separate isEmpty job) and the
@@ -442,7 +433,6 @@ object IncrementalDedup {
       collect_set(bandBucket).as("bks")).head()
     val nBanded = bandedStats.getLong(0)
     val bks = bandedStats.getSeq[Int](1)
-    lap("banded")
 
     // ---- candidates: within-batch self-join + batch-vs-index join --
     val candsNew = banded.withColumnRenamed("doc_id", "id_a")
@@ -500,7 +490,6 @@ object IncrementalDedup {
         }
       }
     toRelease += edgesHist
-    lap("edgesHist")
 
     // ---- incremental CC: batch pairs + star edges ------------------
     // size-gated: driver union-find for micro-batch-sized edge sets
@@ -510,11 +499,9 @@ object IncrementalDedup {
     // input itself (the old eager allEdges cut materialized the same
     // union one job earlier, then CC re-persisted it — pure overhead)
     val allEdges = edgesNew.union(edgesHist)
-    lap("allEdges")
     val labels = Dedup.connectedComponentsAuto(allEdges,
       maxDriverEdges = driverMaxEdges, checkpointDir = checkpointDir)
     toRelease += labels
-    lap("labels")
 
     // historic cluster labels whose component found a smaller minimum:
     // record the merge instead of rewriting the losing cluster's rows
@@ -554,14 +541,12 @@ object IncrementalDedup {
       } else
         rows.write.mode("append").partitionBy("bucket").parquet(bandsPath(root))
     }
-    lap("writeBands")
     // test-only failpoint: proves the crash-ordering contract (bands
     // landed, docs not → the retry re-processes the batch and its own
     // stale band rows are harmless)
     if (failAfterBands) throw new RuntimeException("failpoint: after bands write")
     if (!newMerges.isEmpty)
       newMerges.coalesce(1).write.mode("append").parquet(mergesPath(root))
-    lap("writeMerges")
     // one direct LEFT join of toks onto the labels (unlabeled docs keep
     // their own id as the cluster label) — the old form routed through a
     // toks-derived batchLabels frame and re-joined it onto toks, a
@@ -571,7 +556,6 @@ object IncrementalDedup {
       .withColumn("bucket", pmod(hash(col("doc_id")), lit(buckets)))
       .repartition(col("bucket"))
       .write.mode("append").partitionBy("bucket").parquet(docsPath(root))
-    lap("writeDocs")
     if (wroteBands && !pendingBefore) fMark.delete(pendingMark, false)
     toRelease.foreach(_.unpersist())
   }

@@ -60,8 +60,6 @@ object Retrieval {
   /** Core of [[bm25Search]] over an explicit (doc_id, text) frame. */
   def bm25SearchOf(docs: DataFrame,
       queries: Seq[(Int, Seq[String])] = BmQueries): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
     val withDl = docs.select(col("doc_id"), split(col("text"), " ").as("ws"))
       .select(col("doc_id"), col("ws"), size(col("ws")).cast("long").as("dl"))
     // N and Σdl as ONE broadcast scalar row

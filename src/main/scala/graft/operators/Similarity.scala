@@ -1192,7 +1192,7 @@ object Similarity {
     * (r20): indexing each CANDIDATE into its `candAssign` nearest
     * buckets multiplies blocked pair volume by ~candAssign but lets an
     * anchor find neighbors that fell just across its probe-bucket
-    * boundary. Measured sf0.1 curve (RecallSweep, md5-panel recall@5
+    * boundary. Measured sf0.1 curve (a one-off sweep, md5-panel recall@5
     * vs pre-dedup blocked pair volume, n=5000/k=71):
     * (anchor,cand)=(2,1) 0.498 @ 0.86 M pairs → (3,1) 0.582 @ 1.30 M →
     * (2,2) 0.650 @ 1.76 M → (3,2) 0.738 @ 2.66 M → (3,3) 0.810 @

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
@@ -840,7 +840,7 @@ object EventStream {
       val isFlush = evs.exists(_.event_type == "flush")
       val incoming = evs.filter(_.event_type != "flush")
         .map(t => CepBuf(t.event_id, tsToUs(t.ts), tagOf(t.event_type)))
-      var c = if (core.exists()) core.get()
+      val c = if (core.exists()) core.get()
         else CepSkipCore(Long.MinValue, Long.MinValue, Seq.empty)
       val front = (c.frontier +: incoming.map(_.ts_us)).max
       val cut =

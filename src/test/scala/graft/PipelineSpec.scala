@@ -79,7 +79,7 @@ class PipelineSpec extends SparkSpec {
 
   test("opt-in boilerplate scrub + frozen model gate compose into the pipeline") {
     import spark.implicits._
-    import graft.operators.{Classifier, Curation}
+    import graft.operators.Classifier
     // corpus: 20 good-vocab docs (12 with a planted block-aligned
     // 3-word template), 20 bad-vocab docs. The fixture must survive
     // every EARLIER stage to reach the two under test — measured

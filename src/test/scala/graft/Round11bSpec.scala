@@ -156,7 +156,6 @@ class Round11bSpec extends SparkSpec {
       s
     }
     val ids = vecs.map(_._1)
-    val byId = vecs.toMap
     val parent = scala.collection.mutable.Map(ids.map(i => i -> i): _*)
     def find(x: Long): Long = if (parent(x) == x) x else { val r = find(parent(x)); parent(x) = r; r }
     for { (ia, va) <- vecs; (ib, vb) <- vecs if ia < ib } {

@@ -198,7 +198,6 @@ class Round12eSpec extends SparkSpec {
   }
 
   test("q62 SCD2 + as-of join: point-in-time lookup equals interval containment") {
-    import spark.implicits._
     // dimension history from the change stream, probed at arbitrary
     // times through the custom AsOf plan — the temporal-join use an
     // SCD2 table exists for. Truth: the version whose half-open
@@ -233,7 +232,6 @@ class Round12eSpec extends SparkSpec {
   }
 
   test("q62 streaming SCD2: change stream → upsertHistoric log (with replay) → intervals equal batch") {
-    import spark.implicits._
     // the streaming SCD2 recipe: land the raw change stream through
     // the replay-idempotent historic sink (exactly-once by the
     // store-authority anti-join), derive intervals by reading the log —

@@ -87,7 +87,6 @@ class Round13Spec extends SparkSpec {
   }
 
   test("q56 size-gated joins: broadcast regime and forced-shuffle regime agree") {
-    import org.apache.spark.sql.functions.col
     def finalPlan(df: org.apache.spark.sql.DataFrame): String = {
       df.collect() // AQE finalizes the physical plan only after execution
       df.queryExecution.executedPlan.toString

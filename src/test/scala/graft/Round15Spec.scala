@@ -42,7 +42,6 @@ class Round15Spec extends SparkSpec {
 
   test("q65 SKIP TO NEXT ROW: overlapping matches, per-attempt kill semantics") {
     import spark.implicits._
-    import org.apache.spark.sql.functions._
     def ts(min: Long) = new java.sql.Timestamp(min * 60000L)
     // user 1: view@0 click view@2 click purchase@4
     //   -> TWO overlapping matches sharing the purchase: (v0, n_mid=3), (v2, n_mid=1)

@@ -79,7 +79,7 @@ class Round17bSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
     val want = refPageRank(pairs, 8)
     assert(got.length == want.size)
-    got.foreach { case (node, deg, units, pr) =>
+    got.foreach { case (node, _, units, pr) =>
       assert(units == want(node), s"node $node: $units != ${want(node)}")
       assert(pr == units.toDouble * 1e-9)
     }

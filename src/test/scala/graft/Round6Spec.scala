@@ -48,7 +48,6 @@ class Round6Spec extends SparkSpec {
   }
 
   test("incremental dedup: random corpora + random splits stay parity with the batch pipeline") {
-    import spark.implicits._
     // deterministic pseudo-random corpora: word salads over a small
     // vocab (dup-dense by pigeonhole) — parity must hold whatever the
     // LSH captures, because both paths share the capture
@@ -161,7 +160,6 @@ class Round6Spec extends SparkSpec {
     // band_hash and the per-cycle join stops shuffling the historic
     // side — only the (small) batch side moves. Same schema, same join
     // keys as upsertBatch's index join.
-    import spark.implicits._
     spark.sql("DROP TABLE IF EXISTS band_idx_b")
     val docs = Tables.documents(spark, sf)
     // the REAL band rows — same shared builders upsertBatch uses

@@ -460,7 +460,6 @@ class Round8Spec extends SparkSpec {
 
   test("curatedInsertStream: frozen model gate drops low-quality docs in-stream, replay-stable") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import org.apache.spark.sql.functions.col
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val root = Files.createTempDirectory("graft_cur_mstream").toString

@@ -152,7 +152,6 @@ class SinksSpec extends SparkSpec {
   }
 
   test("compactPartitions: tiny-file partitions collapse to the byte-target count, idempotent, row-exact") {
-    import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft_compact").toString
     // deliberately fragment: 3 day-partitions × 20 writer files each
     val df = spark.range(6000).select(col("id"),
@@ -176,7 +175,6 @@ class SinksSpec extends SparkSpec {
   }
 
   test("writeZOrdered: file stats prune BOTH dimensions; a lead-sort layout prunes only its key") {
-    import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft_zorder").toString
     // two independent uniform dims — the layout, not the data, decides
     // whether a y-predicate can skip files
@@ -203,7 +201,6 @@ class SinksSpec extends SparkSpec {
   }
 
   test("readPruned: footer stats skip files a selective 2-D box can't touch; rows exact") {
-    import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft_prune").toString
     val df = spark.range(100000).select(col("id"),
       (col("id") % 1000).cast("double").as("x"),

@@ -28,7 +28,6 @@ class ThetaSketchSpec extends SparkSpec {
   }
 
   test("estimation regime: 100k distinct within 4x rsd; intersection within bounds") {
-    import spark.implicits._
     // two 100k-element sets sharing 30k values
     val df = spark.range(100000).select(lit("A").as("side"), concat(lit("x"), col("id")).as("v"))
       .union(spark.range(70000, 170000).select(lit("B").as("side"), concat(lit("x"), col("id")).as("v")))
@@ -45,7 +44,6 @@ class ThetaSketchSpec extends SparkSpec {
   }
 
   test("order-free: sketch over the whole == driver-union of per-slice sketches, any split") {
-    import spark.implicits._
     val vals = spark.range(50000).select(concat(lit("v"), col("id")).as("v"),
       pmod(col("id"), lit(3)).as("slice"))
     val whole = vals.agg(ThetaSketch.sketch(col("v"), K).as("sk"))
