@@ -75,9 +75,11 @@ object Bench {
     // would quietly stretch the wall — fail loudly instead
     val unresolved = heavyFirst.filterNot(SparkEntry.queries.contains)
     require(unresolved.isEmpty, s"heavyFirst names not in SparkEntry.queries: $unresolved")
-    // session-level reliable-checkpoint dir: checkpoint-capable
-    // operators (surrogateIds, bounded CC) write file-backed cuts here
-    // instead of accumulating MEMORY_AND_DISK blocks across the suite
+    // the session's one reliable-checkpoint dir: every
+    // graft.ops.Checkpoints.cut (surrogateIds, the token-budget mix,
+    // d36's eager cuts, the CC loops above the driver gate) writes
+    // file-backed cuts here instead of accumulating MEMORY_AND_DISK
+    // blocks across the suite
     graft.ops.Checkpoints.install(spark.sparkContext,
       java.nio.file.Files.createTempDirectory("graft_bench_ckpt").toString)
     val ordered = {

@@ -15,10 +15,6 @@ object Schema {
   case class Order(o_orderkey: Long, o_custkey: Long, o_orderstatus: String,
       o_totalprice: Double, o_orderdate: java.sql.Timestamp,
       o_orderpriority: String)
-  case class Event(event_id: Long, ts: java.sql.Timestamp, user_id: Long,
-      event_type: String, value: Double, props: String)
-  case class Document(doc_id: Long, text: String, lang: String,
-      source: String, n_chars: Long)
 
   def lineitemDs(s: SparkSession, d: String): Dataset[Lineitem] = {
     import s.implicits._
@@ -27,13 +23,5 @@ object Schema {
   def ordersDs(s: SparkSession, d: String): Dataset[Order] = {
     import s.implicits._
     Tables.orders(s, d).as[Order]
-  }
-  def eventsDs(s: SparkSession, d: String): Dataset[Event] = {
-    import s.implicits._
-    Tables.events(s, d).as[Event]
-  }
-  def documentsDs(s: SparkSession, d: String): Dataset[Document] = {
-    import s.implicits._
-    Tables.documents(s, d).as[Document]
   }
 }

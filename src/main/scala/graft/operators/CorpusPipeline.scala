@@ -34,8 +34,6 @@ object CorpusPipeline {
 
   /** @param docs (doc_id: long, text: string) + any carry-through cols
     * @param minWords quality gate: minimum whitespace words post-scrub
-    * @param checkpointDir reliable checkpointing for the component loop
-    *   (pass on a real cluster; None → localCheckpoint for tests)
     * @param benchmark held-out eval docs (doc_id, text); when given,
     *   docs sharing any word 8-gram are dropped (d24)
     * @param maxRepFrac repetition gate: drop docs whose duplicate-
@@ -55,11 +53,10 @@ object CorpusPipeline {
     *   cut's own action, a lazy cut would leave them undelivered
     *   forever), the CC loop's one convergence count, and the final
     *   chunk count on the returned cached frame (the caller unpersists
-    *   it when done). Cuts are reliable checkpoints when checkpointDir
-    *   is set, localCheckpoint otherwise.
+    *   it when done). Cuts go through graft.ops.Checkpoints.cut:
+    *   reliable under an installed checkpoint dir, local otherwise.
     */
   def buildTrainingCorpus(docs: DataFrame, minWords: Int = 5,
-      checkpointDir: Option[String] = None,
       benchmark: Option[DataFrame] = None,
       maxRepFrac: Double = 1.0,
       mixTargetFrac: Option[Double] = None,
@@ -76,12 +73,6 @@ object CorpusPipeline {
       val o = new org.apache.spark.sql.Observation()
       stats += name -> o
       df.observe(o, count(lit(1)).as("rows"))
-    }
-    def cut(df: DataFrame): DataFrame = checkpointDir match {
-      case Some(dir) =>
-        graft.ops.Checkpoints.install(df.sparkSession.sparkContext, dir)
-        df.checkpoint(eager = true)
-      case None => df.localCheckpoint(eager = true)
     }
 
     // 1. scrub: URL/email strip, whitespace collapse, lowercase (d12).
@@ -105,8 +96,8 @@ object CorpusPipeline {
       .groupBy(md5(col("text")).as("fp"))
       .agg(min(col("doc_id")).as("doc_id"))
       .select("doc_id")
-    val exact = cut(observed("exact_dedup",
-      quality.join(keepIds, Seq("doc_id"), "left_semi")))
+    val exact = graft.ops.Checkpoints.cut(observed("exact_dedup",
+      quality.join(keepIds, Seq("doc_id"), "left_semi")), eager = true)
 
     // 4. near-dup dedup: MinHash-LSH candidate pairs (bounded by
     //    banding) → connected components → keep one doc per cluster (d2).
@@ -132,8 +123,7 @@ object CorpusPipeline {
     // bench now that per-query FAIR pools exist. Above the gate the
     // barrier-free bounded loop runs as before (per-round lazy cuts,
     // one convergence count).
-    val cc = Dedup.connectedComponentsAuto(pairs.select("id_a", "id_b"),
-      checkpointDir = checkpointDir)
+    val cc = Dedup.connectedComponentsAuto(pairs.select("id_a", "id_b"))
     val drop = cc.filter(col("node") =!= col("cluster_id"))
       .select(col("node").as("doc_id"))
     // un-observed twin for the side branches that re-read a stage's
@@ -249,7 +239,8 @@ object CorpusPipeline {
     //    ride to the final chunk count instead and no cut is taken.
     val mixed = mixTargetFrac match {
       case Some(f) if modelGated.columns.contains("source") =>
-        observed("domain_mix", Curation.mixKeepFilter(cut(modelGated), f))
+        observed("domain_mix", Curation.mixKeepFilter(
+          graft.ops.Checkpoints.cut(modelGated, eager = true), f))
       case _ => modelGated
     }
 

@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -235,27 +234,21 @@ object Curation {
     *
     * Scale shape: the running sum is a per-source ordered prefix sum —
     * a naive window would sort each source inside ONE partition (5 TB a
-    * partition at 100 TB with 20 sources). Instead the two-level scheme
-    * from Silver.surrogateIds: range-partition on the selection order,
-    * local running sum per physical partition, per-partition offsets
-    * (tiny) broadcast back. Identical cum values to the global window,
-    * skew bounded by the range partitioner. */
+    * partition at 100 TB with 20 sources). Instead the two-level
+    * Silver.rangedRunningSum: identical cum values to the global
+    * window, skew bounded by the range partitioner. */
   def tokenBudgetMix(s: SparkSession, d: String): DataFrame =
     tokenBudgetMixOf(Tables.documents(s, d).select("doc_id", "source", "text"))
 
   /** Core of [[tokenBudgetMix]] over an explicit (doc_id, source, text)
-    * frame. checkpointDir pins the sampled range layout reliably on a
-    * real cluster (None → localCheckpoint, fine for single-JVM).
-    * `bpeVocab` switches token accounting from whitespace words to real
-    * BPE tokenizer tokens (graft.functions.Bpe) — same plan shape, the
-    * n_tokens projection swaps one codegen'd expression for another;
-    * budgets are set in the units LLM training budgets actually use. */
+    * frame. `bpeVocab` switches token accounting from whitespace words
+    * to real BPE tokenizer tokens (graft.functions.Bpe) — same plan
+    * shape, the n_tokens projection swaps one codegen'd expression for
+    * another; budgets are set in the units LLM training budgets
+    * actually use. */
   def tokenBudgetMixOf(docs: DataFrame, targetFrac: Double = 0.5,
-      partitions: Int = 32, checkpointDir: Option[String] = None,
+      partitions: Int = 32,
       bpeVocab: Option[graft.functions.BpeVocab] = None): DataFrame = {
-    val sc = docs.sparkSession.sparkContext
-    checkpointDir.foreach(graft.ops.Checkpoints.install(sc, _))
-    val reliable = checkpointDir.isDefined || graft.ops.Checkpoints.installed(sc).isDefined
     val nTokens = bpeVocab match {
       case Some(v) => graft.functions.Bpe.tokenCount(col("text"), v)
       case None => size(array_remove(split(col("text"), " "), "")).cast("long")
@@ -269,27 +262,10 @@ object Curation {
         count(lit(1)).as("n_groups"))))
       .select(col("source"),
         (lit(targetFrac) * col("total") / col("n_groups")).as("budget"))
-    // pin ONE sampled range layout: both consumers (local cumsums and
-    // the offset counts) must see the same partition boundaries, and
-    // RangePartitioner samples nondeterministically per execution
-    val ranged0 = toks
-      .repartitionByRange(partitions, col("source"), col("u"), col("doc_id"))
-      .withColumn("_pid", spark_partition_id())
-    val ranged =
-      if (reliable) ranged0.checkpoint(eager = false)
-      else ranged0.localCheckpoint(false)
-    val localW = Window.partitionBy("source", "_pid").orderBy("u", "doc_id")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val offs = ranged.groupBy("source", "_pid").agg(sum(col("n_tokens")).as("_psum"))
-      .withColumn("_off", coalesce(sum(col("_psum")).over(
-        Window.partitionBy("source").orderBy("_pid")
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select("source", "_pid", "_off")
-    ranged
-      .withColumn("_cum", sum(col("n_tokens")).over(localW))
-      .join(broadcast(offs), Seq("source", "_pid"))
+    Silver.rangedRunningSum(toks, Seq("source"), Seq("u", "doc_id"),
+        col("n_tokens"), "_run", partitions)
       .join(broadcast(budgets), "source")
-      .filter((col("_cum") + col("_off")) <= col("budget"))
+      .filter(col("_run") <= col("budget"))
       .select("doc_id", "source", "n_tokens")
       .orderBy("doc_id")
   }

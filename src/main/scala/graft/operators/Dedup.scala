@@ -340,28 +340,18 @@ object Dedup {
     *
     * Scale shape: each iteration is one shuffle on node id (join +
     * min-agg); iterations ≈ graph diameter (near-dup clusters are
-    * shallow, so 3-6 rounds). Label frontier is checkpointed every
-    * round to cut the lineage — the standard large-graph loop on Spark
-    * without GraphX's partition-pinning machinery.
+    * shallow, so 3-6 rounds). Label frontier is cut every round by
+    * graft.ops.Checkpoints.cut (reliable under an installed checkpoint
+    * dir) — the standard large-graph loop on Spark without GraphX's
+    * partition-pinning machinery.
     */
   /** @param maxIter safety valve only — the loop exits on convergence
     *   (labels are monotone decreasing, so it always converges). The
     *   default accommodates diameter-100 graphs; a cap SMALLER than the
     *   component diameter returns partial labels silently, so don't
     *   lower it to "tune" runtime (use [[connectedComponentsBounded]]
-    *   for barrier-free scheduling instead).
-    * @param checkpointDir when set, per-round frontiers use RELIABLE
-    *   `checkpoint()` into this directory (survives executor loss — the
-    *   100 TB-cluster-safe choice; `localCheckpoint` is executor-memory-
-    *   backed and dies with a lost executor). Unset → localCheckpoint,
-    *   fine for tests/single-JVM. */
-  def connectedComponents(pairs: DataFrame, maxIter: Int = 100,
-      checkpointDir: Option[String] = None): DataFrame = {
-    val spark = pairs.sparkSession
-    checkpointDir.foreach(graft.ops.Checkpoints.install(spark.sparkContext, _))
-    def cut(df: DataFrame): DataFrame =
-      if (checkpointDir.isDefined) df.checkpoint(eager = true)
-      else df.localCheckpoint(eager = true)
+    *   for barrier-free scheduling instead). */
+  def connectedComponents(pairs: DataFrame, maxIter: Int = 100): DataFrame = {
     val edges = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
       .union(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
       .distinct()
@@ -379,11 +369,11 @@ object Dedup {
       // decided on the SAME materialized frame — one count over the
       // checkpointed result, no extra join-and-compare job
       val idType = pairs.schema("id_a").dataType
-      val next = cut(
+      val next = graft.ops.Checkpoints.cut(
         labels.select(col("node"), col("label"), col("label").as("old"))
           .union(neighborLabels.withColumn("old", lit(null).cast(idType)))
           .groupBy("node")
-          .agg(min("label").as("label"), max("old").as("old")))
+          .agg(min("label").as("label"), max("old").as("old")), eager = true)
       changed = next.filter(col("label") =!= col("old")).count()
       labels.unpersist() // frees the INIT cache in round 1; no-op after
       // no re-cache: `next` is already eagerly checkpoint-materialized,
@@ -428,27 +418,26 @@ object Dedup {
     *   A small Some(n) packs each round into n tasks, a single-node
     *   bench tuning for graphs where per-task scheduling overhead, not
     *   data, dominates.
-    * @param checkpointDir when set, the per-round lineage cuts use
-    *   RELIABLE `checkpoint(eager = false)` into this directory —
-    *   still barrier-free (materialized by the single convergence
-    *   count), but an executor loss replays from the checkpoint files
-    *   instead of killing the job (localCheckpoint blocks die with
-    *   their executor). The cluster-safe choice for long pipelines.
+    *
+    * The per-round lineage cuts are lazy graft.ops.Checkpoints.cut
+    * calls: under an installed checkpoint dir they are RELIABLE —
+    * still barrier-free (materialized by the single convergence
+    * count), but an executor loss replays from the checkpoint files
+    * instead of killing the job (localCheckpoint blocks die with
+    * their executor).
     */
   def connectedComponentsBounded(pairs: DataFrame, iters: Int = 8,
       broadcastMaxEdges: Long = 2000000L,
-      roundPartitions: Option[Int] = None,
-      checkpointDir: Option[String] = None): DataFrame = {
-    checkpointDir.foreach(graft.ops.Checkpoints.install(pairs.sparkSession.sparkContext, _))
-    def cut(df: DataFrame): DataFrame =
-      if (checkpointDir.isDefined) df.checkpoint(eager = false)
-      else df.localCheckpoint(eager = false)
+      roundPartitions: Option[Int] = None): DataFrame = {
+    val sc = pairs.sparkSession.sparkContext
+    val reliable = graft.ops.Checkpoints.reliable(sc)
     // edges feed every round's join AND the label init — without a
     // lineage cut the upstream pair-mining query would re-execute
     // once per round
-    val edges = cut(pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
-      .union(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
-      .distinct())
+    val edges = graft.ops.Checkpoints.cut(
+      pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
+        .union(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
+        .distinct(), eager = false)
     // ONE materializing count before the loop: pins the edge RDD (the
     // upstream pair-mining query runs exactly once) and supplies the
     // statistic the broadcast-vs-shuffle gate needs. nodes ≤ edges, so
@@ -475,34 +464,33 @@ object Dedup {
       // iteration — 2^iters subtree executions. A lazy checkpoint
       // truncates lineage and shares one materialized RDD per round
       // WITHOUT the per-round driver count barrier the eager loop pays.
-      labels = cut(labels)
+      labels = graft.ops.Checkpoints.cut(labels, eager = false)
     }
     val last = labels.cache()
     // The convergence count is the ONE action that materializes the
-    // whole deferred chain. With a reliable checkpointDir, Spark by
+    // whole deferred chain. With reliable cuts, Spark by
     // default commits only the TOPMOST checkpoint-marked RDD of a job
     // (spark.checkpoint.checkpointAllMarkedAncestors=false, read as a
     // thread-LOCAL property) — every inner round's "reliable cut"
     // would stay uncommitted and an executor loss would still replay
     // the full lineage. Flip the property around this action so each
     // round's marked RDD actually lands on checkpoint storage.
-    val sc = pairs.sparkSession.sparkContext
     val ckptProp = "spark.checkpoint.checkpointAllMarkedAncestors"
     val prevProp = sc.getLocalProperty(ckptProp)
-    if (checkpointDir.isDefined) sc.setLocalProperty(ckptProp, "true")
+    if (reliable) sc.setLocalProperty(ckptProp, "true")
     val changed =
       try last.filter(col("label") =!= col("old")).count()
-      finally if (checkpointDir.isDefined) sc.setLocalProperty(ckptProp, prevProp)
+      finally if (reliable) sc.setLocalProperty(ckptProp, prevProp)
     val out =
       if (changed == 0) {
         // Materialize off the cache, then release it — returning an
         // alias of the cached plan would leak one cached label RDD per
-        // invocation in a long-lived session (bench/test JVMs). With a
-        // checkpointDir the final round is ALREADY committed to
+        // invocation in a long-lived session (bench/test JVMs). With
+        // reliable cuts the final round is ALREADY committed to
         // reliable storage by the count above — re-checkpointing it
         // would just write the identical label set a second time.
         val res0 = last.select("node", "label")
-        val res = if (checkpointDir.isDefined) res0
+        val res = if (reliable) res0
                   else res0.localCheckpoint(eager = true)
         last.unpersist()
         res
@@ -514,7 +502,7 @@ object Dedup {
         // other); the shortcuts only accelerate convergence.
         val rest = connectedComponents(pairs.select("id_a", "id_b").union(
           last.select(col("node").as("id_a"), col("label").as("id_b"))),
-          maxIter = 1000, checkpointDir = checkpointDir)
+          maxIter = 1000)
         last.unpersist()
         rest.select(col("node"), col("cluster_id").as("label"))
       }
@@ -541,8 +529,7 @@ object Dedup {
     * take the type-generic distributed loop regardless of size.
     */
   def connectedComponentsAuto(pairs: DataFrame,
-      maxDriverEdges: Long = 2000000L,
-      checkpointDir: Option[String] = None): DataFrame = {
+      maxDriverEdges: Long = 2000000L): DataFrame = {
     val s = pairs.sparkSession
     // lazy cut + count in ONE action: an eager localCheckpoint runs its
     // own internal count() and discards the number, so eager-then-count
@@ -560,7 +547,7 @@ object Dedup {
     if (n > maxDriverEdges || !longIds) {
       // bounded CC materializes its own lineage cuts; release ours
       // once it returns or the block leaks per invocation
-      val res = connectedComponentsBounded(cut, checkpointDir = checkpointDir)
+      val res = connectedComponentsBounded(cut)
       cut.unpersist()
       return res
     }

@@ -325,8 +325,6 @@ object IncrementalDedup {
     *   same value across every batch written to one `root` (it is the
     *   pruning contract of the layout; enforced via the persisted
     *   `_layout` marker)
-    * @param checkpointDir reliable checkpoint dir for the per-batch CC
-    *   rounds (executor-loss safety on long pipelines; tests omit it)
     * @param bucketedIndex store the band index as an external BUCKETED
     *   table (CLUSTERED BY the full join key) instead of plain
     *   band_hash-partitioned parquet. The steady-state historic join
@@ -348,7 +346,6 @@ object IncrementalDedup {
     */
   def upsertBatch(batch: DataFrame, root: String, threshold: Double = 0.8,
       blockCols: Seq[String] = Seq("lang", "source"), buckets: Int = 64,
-      checkpointDir: Option[String] = None,
       driverMaxEdges: Long = 2000000L,
       bucketedIndex: Boolean = false): Unit = {
     val s = batch.sparkSession
@@ -500,7 +497,7 @@ object IncrementalDedup {
     // union one job earlier, then CC re-persisted it — pure overhead)
     val allEdges = edgesNew.union(edgesHist)
     val labels = Dedup.connectedComponentsAuto(allEdges,
-      maxDriverEdges = driverMaxEdges, checkpointDir = checkpointDir)
+      maxDriverEdges = driverMaxEdges)
     toRelease += labels
 
     // historic cluster labels whose component found a smaller minimum:

@@ -92,60 +92,52 @@ object Silver {
   }
 
   /** Scalable deterministic surrogate ids: global dense-rank semantics
-    * over a DISTINCT-keyed frame WITHOUT a single-partition window.
-    * Two-level scheme: range-partition on the sort key (so partition i
-    * holds strictly smaller keys than partition i+1), rank locally per
-    * partition, then add each partition's running-count offset (a
-    * window over ≤ `partitions` tiny rows, broadcast back). The result
-    * equals `dense_rank() OVER (ORDER BY keys)` for distinct keys —
-    * boundary placement cancels out — so oracle parity is preserved,
-    * but no task ever holds more than its range slice: the id
-    * assignment survives a dim that ISN'T small (the single-partition
-    * dense_rank was the one silent scale assumption left in q54).
-    */
-  /** @param checkpointDir when set (or when the SESSION already has a
-    *   checkpoint dir installed — see graft.ops.Checkpoints), the
-    *   pinned range layout uses a RELIABLE `checkpoint(eager = false)`
-    *   into it (the bounded-CC pattern): an executor loss replays from
-    *   checkpoint files instead of failing the query, and no
-    *   executor-memory blocks outlive the job — a long-lived driver
-    *   (Bench installs a dir at startup) accumulates nothing in the
-    *   block manager across repeated calls. With neither set →
-    *   `localCheckpoint`: fine for dim-scale frames in tests/
-    *   single-JVM; the MEMORY_AND_DISK blocks are reclaimed by the
-    *   ContextCleaner once the result frame is unreferenced (an
-    *   in-flight lazy consumer is why they cannot be unpersisted
-    *   eagerly here). The checkpoint dir itself is SHARED session
-    *   state — install it through graft.ops.Checkpoints, not ad-hoc
-    *   setCheckpointDir calls. */
+    * over a DISTINCT-keyed frame WITHOUT a single-partition window —
+    * a [[rangedRunningSum]] of 1 in key order. The result equals
+    * `dense_rank() OVER (ORDER BY keys)` for distinct keys (boundary
+    * placement cancels out), so oracle parity is preserved, but no task
+    * ever holds more than its range slice: the id assignment survives a
+    * dim that ISN'T small (the single-partition dense_rank was the one
+    * silent scale assumption left in q54). The pinned range layout is
+    * cut by graft.ops.Checkpoints.cut. */
   def surrogateIds(dim: DataFrame, keyCols: Seq[String], idCol: String,
-      partitions: Int = 32, checkpointDir: Option[String] = None): DataFrame = {
-    val ks = keyCols.map(col)
-    val sc = dim.sparkSession.sparkContext
-    checkpointDir.foreach(graft.ops.Checkpoints.install(sc, _))
-    val reliable = checkpointDir.isDefined || graft.ops.Checkpoints.installed(sc).isDefined
-    // Materialize the ranged layout ONCE (lazy, no driver barrier):
-    // both consumers below — the local ranks and the per-_pid offset
-    // counts — must see the SAME partition boundaries, but
-    // RangePartitioner samples nondeterministically per execution, so
-    // relying on exchange reuse to unify them is fragile (AQE can
-    // defeat it). Checkpointing pins one sampled layout by
-    // construction; the frame is dim-scale, so the executor-local
-    // blocks are cheap.
-    val ranged0 = dim.repartitionByRange(partitions, ks: _*)
-      .withColumn("_pid", spark_partition_id())
-    val ranged =
-      if (reliable) ranged0.checkpoint(eager = false)
-      else ranged0.localCheckpoint(false)
-    val local = ranged.withColumn("_rk",
-      row_number().over(Window.partitionBy("_pid").orderBy(ks: _*)))
-    val offs = local.groupBy("_pid").agg(count(lit(1)).as("_cnt"))
-      .withColumn("_off", coalesce(sum("_cnt").over(
-        Window.orderBy("_pid").rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select("_pid", "_off")
-    local.join(broadcast(offs), "_pid")
-      .withColumn(idCol, (col("_off") + col("_rk")).cast("long"))
-      .drop("_pid", "_rk", "_off")
+      partitions: Int = 32): DataFrame =
+    rangedRunningSum(dim, Nil, keyCols, lit(1L), idCol, partitions)
+
+  /** Two-level running sum: `outCol` = the running sum of `value` in
+    * `orderCols` order within each `groupCols` group, i.e. `sum(value)
+    * OVER (PARTITION BY groupCols ORDER BY orderCols ROWS UNBOUNDED
+    * PRECEDING)` for a unique ordering — without a window that sorts a
+    * whole group inside one task. Range-partition on groupCols ++
+    * orderCols (partition i holds strictly smaller keys than partition
+    * i+1), run the sum locally per (group, partition), then add each
+    * (group, partition)'s offset: a window over ≤ `partitions` tiny
+    * rows per group, broadcast back. Shared by [[surrogateIds]] (a
+    * running count over distinct keys) and Curation.tokenBudgetMixOf (a
+    * running token sum per source). */
+  private[graft] def rangedRunningSum(df: DataFrame, groupCols: Seq[String],
+      orderCols: Seq[String], value: org.apache.spark.sql.Column, outCol: String,
+      partitions: Int): DataFrame = {
+    // Pin ONE sampled range layout (lazy, no driver barrier): both
+    // consumers below — the local sums and the per-partition offsets —
+    // must see the SAME partition boundaries, but RangePartitioner
+    // samples nondeterministically per execution, so relying on
+    // exchange reuse to unify them is fragile (AQE can defeat it).
+    val ranged = graft.ops.Checkpoints.cut(
+      df.repartitionByRange(partitions, (groupCols ++ orderCols).map(col): _*)
+        .withColumn("_pid", spark_partition_id()), eager = false)
+    val byPid = groupCols :+ "_pid"
+    val localW = Window.partitionBy(byPid.map(col): _*).orderBy(orderCols.map(col): _*)
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val offs = ranged.groupBy(byPid.map(col): _*).agg(sum(value).as("_psum"))
+      .withColumn("_off", coalesce(sum(col("_psum")).over(
+        Window.partitionBy(groupCols.map(col): _*).orderBy("_pid")
+          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
+      .select((byPid :+ "_off").map(col): _*)
+    ranged.withColumn("_cum", sum(value).over(localW))
+      .join(broadcast(offs), byPid)
+      .withColumn(outCol, col("_off") + col("_cum"))
+      .drop("_pid", "_cum", "_off")
   }
 
   // Per-(contract, minute) merge: best rank wins, MAX(mark) within it,

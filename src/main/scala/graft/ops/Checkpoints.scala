@@ -1,20 +1,26 @@
 package graft.ops
 
 import org.apache.spark.SparkContext
+import org.apache.spark.sql.DataFrame
 
-/** Single owner for the SESSION-GLOBAL reliable-checkpoint directory.
+/** Single owner for the SESSION-GLOBAL reliable-checkpoint directory
+  * and the one lineage-cut policy that reads it.
+  *
+  * The rule: an operator that cuts a frame it does not release itself
+  * calls [[cut]], which writes a reliable `checkpoint` into the
+  * installed dir when the session has one and a `localCheckpoint`
+  * otherwise. The installed dir is the only switch; no operator takes
+  * a dir parameter or installs one. It is a deployment path, installed
+  * ONCE at session start by the main (Bench) or harness that owns the
+  * session.
   *
   * `SparkContext.setCheckpointDir` is shared mutable state: every
   * in-flight query's pending `checkpoint()` calls resolve the dir at
-  * materialization time, so one operator flipping it mid-run silently
-  * redirects another's checkpoint files (measured hazard under the
-  * concurrent Bench, where several checkpoint-capable operators run at
-  * once). All graft operators install through here: last-setter-wins
-  * semantics are unchanged, but an actual FLIP of an already-installed
-  * dir is logged loudly so an accidental mid-run redirect surfaces in
-  * the driver log instead of as scattered checkpoint files. Deployments
-  * should install ONE dir at session start (Bench does) and leave
-  * per-operator overrides to tests.
+  * materialization time, so a mid-run change silently redirects
+  * another query's checkpoint files. [[install]] keeps last-setter-wins
+  * semantics but logs an actual FLIP of an already-installed dir, so an
+  * accidental mid-run redirect surfaces in the driver log instead of as
+  * scattered checkpoint files.
   */
 object Checkpoints {
 
@@ -38,9 +44,16 @@ object Checkpoints {
     sc.setCheckpointDir(dir)
   }
 
-  /** The session's installed checkpoint dir, if any — operators use
-    * this as their default reliable-checkpoint location so a session
-    * that installed one at startup gets executor-loss-safe, off-heap
-    * checkpoints everywhere without per-call plumbing. */
-  def installed(sc: SparkContext): Option[String] = sc.getCheckpointDir
+  /** Whether the session has a checkpoint dir installed, i.e. whether
+    * [[cut]] writes reliable checkpoints. */
+  def reliable(sc: SparkContext): Boolean = sc.getCheckpointDir.isDefined
+
+  /** Cut `df`'s lineage: a reliable `checkpoint(eager)` into the
+    * installed dir (executor-loss safe, nothing left in the block
+    * manager) when the session has one, `localCheckpoint(eager)`
+    * (executor-memory-and-disk blocks, reclaimed by the ContextCleaner)
+    * otherwise. */
+  def cut(df: DataFrame, eager: Boolean): DataFrame =
+    if (reliable(df.sparkSession.sparkContext)) df.checkpoint(eager)
+    else df.localCheckpoint(eager)
 }

@@ -33,6 +33,34 @@ class PipelineSpec extends SparkSpec {
     assert(dupFp == 0, "exact duplicates survived the pipeline")
   }
 
+  test("corpus pipeline under an installed checkpoint dir: same stage counts, cuts on disk") {
+    // the registered d36 recipe
+    val docs = Tables.documents(spark, sf).select("doc_id", "text", "lang", "source")
+    val bench = docs.filter(col("doc_id") % 7 === 0).select("doc_id", "text")
+    def run(): Seq[(String, Long)] = {
+      val (chunks, stats) = CorpusPipeline.buildTrainingCorpus(docs, minWords = 3,
+        benchmark = Some(bench), maxRepFrac = 0.9, mixTargetFrac = Some(0.5),
+        blockCols = Seq("lang", "source"))
+      chunks.unpersist()
+      stats
+    }
+    val local = withCheckpointDir(None)(run())
+    val dir = Files.createTempDirectory("graft_corpus_ckpt").toString
+    val reliable = withCheckpointDir(Some(dir)) {
+      // each stage counter is an Observation whose get blocks until the
+      // counter arrives; one upstream of a cut that never delivers it
+      // would hang, so the run is bounded
+      import scala.concurrent.{Await, ExecutionContext, Future}
+      import scala.concurrent.duration._
+      Await.result(Future(run())(ExecutionContext.global), 10.minutes)
+    }
+    assert(reliable == local)
+    // the exact-dedup and domain-mix eager cuts landed on reliable storage
+    val rddDirs = new java.io.File(dir).listFiles().flatMap(_.listFiles())
+      .count(f => f.isDirectory && f.getName.startsWith("rdd-"))
+    assert(rddDirs >= 2, s"expected the two eager cuts on disk, found $rddDirs rdd dirs")
+  }
+
   test("corpus pipeline full recipe: decontaminate + repetition gate + domain mix stages compose") {
     val docs = Tables.documents(spark, sf).select("doc_id", "text", "source")
     // benchmark ⊆ corpus: the realistic decontamination setup (remove

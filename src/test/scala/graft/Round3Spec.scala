@@ -83,10 +83,14 @@ class Round3Spec extends SparkSpec {
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L),
       (20L, 21L), (21L, 22L), (20L, 22L)).toDF("id_a", "id_b")
     val dir = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
-    val viaReliable = Dedup.connectedComponents(pairs, checkpointDir = Some(dir))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val viaLocal = Dedup.connectedComponents(pairs)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val viaReliable = withCheckpointDir(Some(dir)) {
+      Dedup.connectedComponents(pairs)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    }
+    val viaLocal = withCheckpointDir(None) {
+      Dedup.connectedComponents(pairs)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    }
     assert(viaReliable == viaLocal)
     // the reliable path actually wrote frontier files into the directory
     def fileCount(f: java.io.File): Int =

@@ -38,17 +38,21 @@ class Round4Spec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft_cc_ckpt").toString
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L),
       (20L, 21L), (21L, 22L)).toDF("id_a", "id_b")
-    assert(asMap(Dedup.connectedComponentsBounded(pairs, iters = 4, checkpointDir = Some(dir))) ==
-           asMap(Dedup.connectedComponents(pairs)))
-    // EVERY round's cut must be committed to reliable storage (edges +
-    // one per round), not just the topmost marked RDD — that is the
-    // executor-loss story the checkpointDir mode exists for
-    val rddDirs = new java.io.File(dir).listFiles().flatMap(_.listFiles())
-      .count(f => f.isDirectory && f.getName.startsWith("rdd-"))
-    assert(rddDirs >= 5, s"expected edges + 4 round checkpoints, found $rddDirs rdd dirs")
     val chain = (1L until 25L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    assert(asMap(Dedup.connectedComponentsBounded(chain, iters = 3, checkpointDir = Some(dir))) ==
-           asMap(Dedup.connectedComponents(chain, maxIter = 50)))
+    val (eagerPairs, eagerChain) = withCheckpointDir(None) {
+      (asMap(Dedup.connectedComponents(pairs)),
+       asMap(Dedup.connectedComponents(chain, maxIter = 50)))
+    }
+    withCheckpointDir(Some(dir)) {
+      assert(asMap(Dedup.connectedComponentsBounded(pairs, iters = 4)) == eagerPairs)
+      // EVERY round's cut must be committed to reliable storage (edges +
+      // one per round), not just the topmost marked RDD — that is the
+      // executor-loss story an installed checkpoint dir exists for
+      val rddDirs = new java.io.File(dir).listFiles().flatMap(_.listFiles())
+        .count(f => f.isDirectory && f.getName.startsWith("rdd-"))
+      assert(rddDirs >= 5, s"expected edges + 4 round checkpoints, found $rddDirs rdd dirs")
+      assert(asMap(Dedup.connectedComponentsBounded(chain, iters = 3)) == eagerChain)
+    }
   }
 
   test("upsertHistoric: empty first batch cannot poison the table; null-ts rows are rejected not duplicated") {

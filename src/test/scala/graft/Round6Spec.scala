@@ -234,9 +234,10 @@ class Round6Spec extends SparkSpec {
         .orderBy("p_brand", "p_type")).cast("long"))
       .collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
     val ckpt = Files.createTempDirectory("graft_sid_ckpt").toString
-    val got = Silver.surrogateIds(dim, Seq("p_brand", "p_type"), "sid",
-        partitions = 8, checkpointDir = Some(ckpt))
-      .collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
+    val got = withCheckpointDir(Some(ckpt)) {
+      Silver.surrogateIds(dim, Seq("p_brand", "p_type"), "sid", partitions = 8)
+        .collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
+    }
     assert(got == expected)
     // the pinned layout really landed on reliable storage
     val files = java.nio.file.Files.walk(java.nio.file.Paths.get(ckpt))
