@@ -487,21 +487,19 @@ object Curation {
     BigramLm(cu, cb, cu.agg(count(lit(1)).as("v")))
   }
 
+  private val LmLayoutVersion = "graft-bigram-lm v1"
+
   def saveBigramLm(lm: BigramLm, path: String): Unit = {
+    val s = lm.cu.sparkSession
+    graft.ops.Artifacts.invalidate(s, path)
     lm.cu.write.mode("overwrite").parquet(s"$path/cu")
     lm.cb.write.mode("overwrite").parquet(s"$path/cb")
     lm.v.coalesce(1).write.mode("overwrite").parquet(s"$path/v")
-    val p = new org.apache.hadoop.fs.Path(s"$path/_layout")
-    val fs = p.getFileSystem(lm.cu.sparkSession.sparkContext.hadoopConfiguration)
-    val out = fs.create(p, true)
-    out.write("graft-bigram-lm v1\n".getBytes("UTF-8"))
-    out.close()
+    graft.ops.Artifacts.writeLayout(s, path, LmLayoutVersion, Nil)
   }
 
   def loadBigramLm(s: SparkSession, path: String): BigramLm = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/_layout")
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    require(fs.exists(p), s"no bigram-LM layout marker at $path — not a trained store")
+    graft.ops.Artifacts.readLayout(s, path, LmLayoutVersion, "bigram-LM"): Unit
     BigramLm(s.read.parquet(s"$path/cu"), s.read.parquet(s"$path/cb"),
       s.read.parquet(s"$path/v"))
   }

@@ -105,7 +105,6 @@ object IncrementalDedup {
   private def bandsPath(root: String) = s"$root/bands"
   private def docsPath(root: String) = s"$root/docs"
   private def mergesPath(root: String) = s"$root/merges"
-  private def layoutPath(root: String) = s"$root/_layout"
   private def bandsPendingPath(root: String) = s"$root/_bands_pending"
 
   private def exists(s: SparkSession, path: String): Boolean = {
@@ -124,34 +123,24 @@ object IncrementalDedup {
   private[graft] case class Layout(buckets: Int, bucketedIndex: Boolean,
       blockCols: Seq[String], threshold: Double)
 
-  private[graft] def readLayout(s: SparkSession, root: String): Option[Layout] = {
-    val p = new Path(layoutPath(root))
-    val f = fs(s, root)
-    if (!f.exists(p)) return None
-    val in = f.open(p)
-    val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-    val kv = text.linesIterator.filter(_.contains("=")).map { l =>
-      val i = l.indexOf('='); l.substring(0, i) -> l.substring(i + 1)
-    }.toMap
-    Some(Layout(kv("buckets").toInt, kv("bucketedIndex").toBoolean,
-      kv("blockCols").split(",").toSeq.filter(_.nonEmpty),
-      kv("threshold").toDouble))
-  }
+  private val LayoutVersion = "v1"
 
-  private def writeLayout(s: SparkSession, root: String, l: Layout): Unit = {
-    val f = fs(s, root)
-    val tmp = new Path(layoutPath(root) + ".tmp")
-    val out = f.create(tmp, true)
-    try out.write(
-      s"""v1
-         |buckets=${l.buckets}
-         |bucketedIndex=${l.bucketedIndex}
-         |blockCols=${l.blockCols.mkString(",")}
-         |threshold=${l.threshold}
-         |""".stripMargin.getBytes("UTF-8"))
-    finally out.close()
-    renameOrThrow(f, tmp, new Path(layoutPath(root)))
-  }
+  private[graft] def readLayout(s: SparkSession, root: String): Option[Layout] =
+    if (!graft.ops.Artifacts.hasLayout(s, root)) None
+    else {
+      val kv = graft.ops.Artifacts.readLayout(s, root, LayoutVersion,
+        "incremental dedup store")
+      Some(Layout(kv("buckets").toInt, kv("bucketedIndex").toBoolean,
+        kv("blockCols").split(",").toSeq.filter(_.nonEmpty),
+        kv("threshold").toDouble))
+    }
+
+  private def writeLayout(s: SparkSession, root: String, l: Layout): Unit =
+    graft.ops.Artifacts.writeLayout(s, root, LayoutVersion, Seq(
+      "buckets" -> l.buckets.toString,
+      "bucketedIndex" -> l.bucketedIndex.toString,
+      "blockCols" -> l.blockCols.mkString(","),
+      "threshold" -> l.threshold.toString))
 
   /** Validate this batch's parameters against the store's persisted
     * layout; first touch writes it (including the first touch of a
@@ -319,7 +308,9 @@ object IncrementalDedup {
   /** Upsert one batch of documents (doc_id, text, blockCols...) into
     * the incremental dedup state at `root`. Idempotent per batch: a
     * replay (streaming restart, retried foreachBatch) re-derives the
-    * same labels and the docs-store guard drops already-landed rows.
+    * same labels and the docs-store guard ([[graft.sources.Sinks.unseen]]
+    * on `docs/`, bucket `pmod(hash(doc_id), buckets)`) drops
+    * already-landed rows.
     *
     * @param buckets  partition-count for both stores — must be the
     *   same value across every batch written to one `root` (it is the
@@ -368,50 +359,16 @@ object IncrementalDedup {
     // and nothing is unpersisted until no later stage can recompute it.
     val toRelease = scala.collection.mutable.ListBuffer.empty[DataFrame]
     val storeExists = exists(s, docsPath(root))
-    // guard agg + tokenization both consume the batch's dedup shuffle:
-    // cut it once (the guard agg is the materializing action)
+    // the guard (Sinks.unseen) and tokenization both consume the
+    // batch's dedup shuffle: cut it once (the guard's one aggregation
+    // is the materializing action)
     val fresh0 = {
       val f0 = batch.dropDuplicates("doc_id")
       if (storeExists) { val c = f0.localCheckpoint(eager = false); toRelease += c; c }
       else f0
     }
-    val fresh =
-      if (!storeExists) fresh0
-      else {
-        // ONE bounded driver action for both prune inputs (≤ `buckets`
-        // ints + the id box) — separate bucket-collect and min/max
-        // aggs would each re-run the batch's dedup shuffle.
-        // The seen-id scan is Sinks.readPruned: bucket-dir prune (same
-        // partitions the old catalyst filter kept) PLUS per-file
-        // doc_id footer-stats pruning against the batch's id box —
-        // docs/ appends one file set per upsert, so files cluster by
-        // insertion batch: a REPLAYED batch touches exactly the files
-        // its failed attempt wrote, and a fresh monotone-id batch skips
-        // the entire history (footer min/max can't overlap). Sound
-        // because a skipped file provably holds no id in the box, so
-        // none of its rows could survive the anti-join; the double
-        // footer stats are id-exact below 2^53 (guarded).
-        val stats = fresh0.agg(
-          collect_set(pmod(hash(col("doc_id")), lit(buckets))).as("bks"),
-          min(col("doc_id")).as("lo"), max(col("doc_id")).as("hi")).head()
-        val bks = stats.getSeq[Int](0)
-        val seen =
-          if (stats.isNullAt(1)) fresh0.select("doc_id").limit(0)
-          else {
-            val (lo, hi) = (stats.getLong(1), stats.getLong(2))
-            val exact = 1L << 53
-            if (lo <= -exact || hi >= exact)
-              s.read.parquet(docsPath(root))
-                .filter(col("bucket").isin(bks: _*)).select("doc_id")
-            else {
-              val keepDirs = bks.map(b => s"bucket=$b").toSet
-              graft.sources.Sinks.readPruned(s, docsPath(root),
-                  Seq(("doc_id", lo.toDouble, hi.toDouble)), keepDirs)
-                .select("doc_id")
-            }
-          }
-        fresh0.join(seen, Seq("doc_id"), "left_anti")
-      }
+    val fresh = graft.sources.Sinks.unseen(fresh0,
+      pmod(hash(col("doc_id")), lit(buckets)), docsPath(root), "bucket", Seq("doc_id"))
 
     // lazy cut + count in ONE action (an eager localCheckpoint runs an
     // internal count() and discards it; the old eager-then-isEmpty was

@@ -131,30 +131,20 @@ object Retrieval {
 
   private def postingsPath(root: String) = s"$root/postings"
   private def statsPath(root: String) = s"$root/stats"
-  private def layoutPath(root: String) = new org.apache.hadoop.fs.Path(s"$root/_layout")
+  private val TermIndexLayoutVersion = "graft-term-index-v1"
 
-  private def writeLayout(spark: SparkSession, root: String, buckets: Int): Unit = {
-    val fs = layoutPath(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(layoutPath(root))) {
-      val out = fs.create(layoutPath(root), true)
-      out.write(s"buckets=$buckets\n".getBytes("UTF-8"))
-      out.close()
-    }
-  }
+  private def writeLayout(spark: SparkSession, root: String, buckets: Int): Unit =
+    if (!graft.ops.Artifacts.hasLayout(spark, root))
+      graft.ops.Artifacts.writeLayout(spark, root, TermIndexLayoutVersion,
+        Seq("buckets" -> buckets.toString))
 
-  private def checkLayout(spark: SparkSession, root: String, buckets: Int): Unit = {
-    val fs = layoutPath(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(layoutPath(root))) {
-      val in = fs.open(layoutPath(root))
-      val txt = scala.io.Source.fromInputStream(in).mkString
-      in.close()
-      val stored = txt.linesIterator.collectFirst {
-        case l if l.startsWith("buckets=") => l.stripPrefix("buckets=").trim.toInt
-      }
-      require(stored.contains(buckets),
+  private def checkLayout(spark: SparkSession, root: String, buckets: Int): Unit =
+    if (graft.ops.Artifacts.hasLayout(spark, root)) {
+      val stored = graft.ops.Artifacts.readLayout(spark, root, TermIndexLayoutVersion,
+        "term index").get("buckets")
+      require(stored.contains(buckets.toString),
         s"term index at $root was built with buckets=${stored.getOrElse("?")}, got $buckets")
     }
-  }
 
   /** Build (or rebuild) the base index from a (doc_id, text) frame.
     * The base lands as batch_id = -1; streaming appends use their
@@ -507,13 +497,9 @@ object Retrieval {
       monitor: Option[graft.ops.Monitoring.FreshnessMonitor] = None
   ): org.apache.spark.sql.streaming.StreamingQuery = {
     writeLayout(stream.sparkSession, root, buckets)
-    monitor.foreach(_.register(root))
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        writeIndexBatch(batch.toDF().select("doc_id", "text"), root, batchId, buckets)
-        monitor.foreach(_.record(root))
-      }
-      .start()
+    graft.streaming.EventStream.sink(stream, root, checkpoint, monitor) { (batch, batchId) =>
+      writeIndexBatch(batch.select("doc_id", "text"), root, batchId, buckets)
+      None
+    }
   }
 }

@@ -472,13 +472,12 @@ object Similarity {
     * Replay-safe: an at-least-once re-delivery (streaming restart,
     * retried foreachBatch) must not duplicate vectors, so already-
     * indexed vec_ids are anti-joined away first — the INDEX is the
-    * authority, like the other graft sinks. Assignment is
-    * deterministic under frozen centroids, so a re-delivered vector
-    * lands in its original bucket and the guard scan prunes to the
-    * batch's own buckets.
+    * authority, like the other graft sinks ([[graft.sources.Sinks.unseen]]
+    * keyed on vec_id). Assignment is deterministic under frozen
+    * centroids, so a re-delivered vector lands in its original bucket
+    * and the guard reads only the batch's own bucket dirs.
     */
   def appendToIvfIndex(newEmb: DataFrame, cents: DataFrame, path: String): IvfDrift = {
-    val s = newEmb.sparkSession
     val dedup = newEmb.dropDuplicates("vec_id")
     val assigned = dedup
       .join(assign(dedup, cents).select("vec_id", "bucket", "d2"), "vec_id")
@@ -487,44 +486,8 @@ object Similarity {
     // aggregation on the already-materialized assignment): the trend a
     // deployment watches to schedule re-clustering
     val drift = driftOfAssigned(assigned, cents.count())
-    val hPath = new org.apache.hadoop.fs.Path(path)
-    val fs = hPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val novel =
-      if (!fs.exists(hPath)) assigned
-      else {
-        // ONE bounded driver action (≤ k bucket ids + the id box).
-        // The guard scan is bucket-dir pruned AND vec_id-footer-box
-        // pruned (Sinks.readPruned): index files cluster by insertion
-        // batch, so a replayed batch touches exactly the files its
-        // failed attempt wrote and a fresh monotone-id batch skips the
-        // touched buckets' whole history — the guard cost stops
-        // growing with index lifetime (the r19 tripletMineStream
-        // discipline applied to the index itself).
-        val stats = assigned.agg(
-          collect_set(col("bucket")).as("bks"),
-          min(col("vec_id")).as("lo"), max(col("vec_id")).as("hi")).head()
-        val bks = stats.getSeq[Int](0)
-        val exact = 1L << 53
-        val longIds = assigned.schema("vec_id").dataType ==
-          org.apache.spark.sql.types.LongType
-        val boxed =
-          if (!longIds || stats.isNullAt(1)) None
-          else {
-            val (lo, hi) = (stats.getLong(1), stats.getLong(2))
-            if (lo <= -exact || hi >= exact) None else Some((lo, hi))
-          }
-        val seen = boxed match {
-          case Some((lo, hi)) =>
-            graft.sources.Sinks.readPruned(s, path,
-                Seq(("vec_id", lo.toDouble, hi.toDouble)),
-                bks.map(b => s"bucket=$b").toSet)
-              .select("vec_id")
-          case None =>
-            s.read.parquet(path)
-              .filter(col("bucket").isin(bks: _*)).select("vec_id")
-        }
-        assigned.join(seen, Seq("vec_id"), "left_anti")
-      }
+    val novel = graft.sources.Sinks.unseen(assigned, col("bucket"), path, "bucket",
+      Seq("vec_id"))
     // zero-row partitioned append would poison a fresh path; repartition
     // on the partition column bounds the writer fan-out (tasks × buckets
     // tiny files otherwise)

@@ -2,9 +2,10 @@ package graft.ops
 
 import org.apache.spark.sql.SparkSession
 
-/** The `_layout` commit-marker discipline shared by every persisted
-  * model artifact (Classifier model, PQ model, BPE vocab — one
-  * implementation, three callers):
+/** The `_layout` marker discipline shared by every persisted artifact
+  * and store that pins its layout (Classifier model, PQ model, BPE
+  * vocab, bigram LM, term index, IncrementalDedup store — one
+  * implementation):
   *
   *  - `invalidate` runs FIRST in a save, deleting any existing marker:
   *    a crashed RE-save must never leave the previous, still-valid
@@ -12,7 +13,9 @@ import org.apache.spark.sql.SparkSession
   *    crash window was already safe — no marker, no load — but an
   *    overwrite's was not).
   *  - `writeLayout` runs LAST, committing a version line plus
-  *    `key=value` lines. Until it lands, `readLayout` fails fast.
+  *    `key=value` lines through a tmp file and a checked rename, so a
+  *    crash mid-write never leaves a torn marker. Until it lands,
+  *    `readLayout` fails fast.
   *  - `readLayout` validates presence and the version line, then
   *    returns the key→value map; callers validate their own
   *    counts/shapes against the data files (torn-artifact checks).
@@ -30,16 +33,26 @@ object Artifacts {
     if (fs.exists(p)) fs.delete(p, false)
   }
 
+  /** Whether a marker is committed at `path`. */
+  def hasLayout(s: SparkSession, path: String): Boolean = {
+    val p = markerPath(path)
+    p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p)
+  }
+
   /** Commit the marker (version line + key=value lines). Write LAST. */
   def writeLayout(s: SparkSession, path: String, version: String,
       kvs: Seq[(String, String)]): Unit = {
     val p = markerPath(path)
+    val tmp = p.suffix(".tmp")
     val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val out = fs.create(p, true)
+    val out = fs.create(tmp, true)
     try out.write(
       (version +: kvs.map { case (k, v) => s"$k=$v" }).mkString("", "\n", "\n")
         .getBytes("UTF-8"))
     finally out.close()
+    // rename() reports failure as a boolean on many FileSystems
+    if (!fs.rename(tmp, p))
+      throw new IllegalStateException(s"rename $tmp -> $p failed; marker not committed")
   }
 
   /** Read + validate the marker; `what` names the artifact in errors. */

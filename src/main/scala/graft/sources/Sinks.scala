@@ -1,7 +1,8 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Sources/sinks mirroring the reference's landing zones.
   *
@@ -378,11 +379,12 @@ object Sinks {
     * conjunction of closed numeric ranges: (kept, skipped). A file is
     * skipped only when its footer PROVES some range can't match
     * (fileMax < lo or fileMin > hi); missing/typeless stats keep the
-    * file — skipping is an optimization, never a filter. */
+    * file — skipping is an optimization, never a filter. No ranges:
+    * every listed file is kept and no footer is read (the dir-only
+    * listing). */
   def prunedDataFiles(spark: SparkSession, path: String,
       ranges: Seq[(String, Double, Double)],
       dirFilter: String => Boolean = _ => true): (Seq[String], Seq[String]) = {
-    require(ranges.nonEmpty, "at least one (column, lo, hi) range required")
     val conf = spark.sessionState.newHadoopConf()
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(conf)
@@ -409,7 +411,7 @@ object Sinks {
         else Seq(st)
       }
     val cols = ranges.map(_._1)
-    val (kept, skipped) = dataFiles(root, top = true).partition { st =>
+    def mayMatch(st: org.apache.hadoop.fs.FileStatus): Boolean = {
       val fr = footerRanges(conf, st, cols) // ONE footer read per file
       ranges.forall { case (c, lo, hi) =>
         fr(c) match {
@@ -418,6 +420,8 @@ object Sinks {
         }
       }
     }
+    val (kept, skipped) = dataFiles(root, top = true)
+      .partition(st => ranges.isEmpty || mayMatch(st))
     (kept.map(_.getPath.toString), skipped.map(_.getPath.toString))
   }
 
@@ -435,8 +439,65 @@ object Sinks {
     val (kept, _) = prunedDataFiles(spark, path, ranges, dirFilter)
     val residual = ranges.map { case (c, lo, hi) =>
       col(c).cast("double") >= lo && col(c).cast("double") <= hi
-    }.reduce(_ && _)
+    }.foldLeft(lit(true))(_ && _)
     if (kept.isEmpty) spark.read.parquet(path).filter(lit(false))
     else spark.read.option("basePath", path).parquet(kept: _*).filter(residual)
+  }
+
+  /** Footer stats are doubles: a Long id is exact in them only inside
+    * ±2^53, so the id-box file prune is limited to that range. */
+  private val ExactLong = 1L << 53
+
+  /** The replay guard of every store-authority sink — the reference's
+    * dedup-insert (`LEFT JOIN … IS NULL` against HISTORIC before the
+    * insert, sql/opt.sql:320-391): the rows of `batch` whose `keys` the
+    * parquet store at `path` does not hold yet. The store is
+    * hive-partitioned by `dirCol`, and a stored row sits in the
+    * `dirCol=N` dir named by its `bucket` value, so a re-delivered row
+    * is looked up only in its own bucket dir.
+    *
+    *  - A missing store returns `batch` and runs no job.
+    *  - Otherwise ONE aggregation collects the batch's `bucket` values
+    *    and the min/max of `keys.head`; an empty box returns
+    *    `batch.limit(0)`.
+    *  - Only the `dirCol=N` dirs of those buckets are listed (a flat
+    *    store with no `dirCol=` dirs has all its top-level files
+    *    listed). When `keys.head` is a Long inside ±2^53 the listed
+    *    files are also pruned by their footer min/max against the id
+    *    box: stores append one file set per batch, so a replay reads
+    *    the files its failed attempt wrote and a fresh monotone-id
+    *    batch skips its buckets' history. Any other key reads every
+    *    listed file, with no footer reads.
+    *  - The result is `left_anti` on `keys`. The store is read with the
+    *    batch's key types (no schema-inference job) and only inside
+    *    the key box.
+    *
+    * Single writer per store, like every graft sink: two writers can
+    * both pass the guard before either appends. */
+  def unseen(batch: DataFrame, bucket: Column, path: String, dirCol: String,
+      keys: Seq[String]): DataFrame = {
+    val spark = batch.sparkSession
+    val root = new org.apache.hadoop.fs.Path(path)
+    if (!root.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(root))
+      return batch
+    val id = keys.head
+    val st = batch.agg(collect_set(bucket), min(col(id)), max(col(id))).head()
+    if (st.isNullAt(1)) return batch.limit(0)
+    val (lo, hi) = (st.get(1), st.get(2))
+    val box = (lo, hi) match {
+      case (l: Long, h: Long) if l > -ExactLong && h < ExactLong =>
+        Seq((id, l.toDouble, h.toDouble))
+      case _ => Nil
+    }
+    val dirs = st.getSeq[Any](0).map(b => s"$dirCol=$b").toSet
+    val (kept, _) = prunedDataFiles(spark, path, box, dirs)
+    if (kept.isEmpty) batch
+    else {
+      val seen = spark.read.schema(StructType(keys.map(batch.schema(_))))
+        .option("basePath", path).parquet(kept: _*)
+        .filter(col(id).between(lit(lo), lit(hi)))
+        .select(keys.map(col): _*)
+      batch.join(seen, keys, "left_anti")
+    }
   }
 }

@@ -931,12 +931,32 @@ object EventStream {
     */
   def landToDailyParquet(stream: DataFrame, path: String,
       checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
+    sink(stream, path, checkpoint, None) { (batch, _) =>
+      graft.sources.Sinks.writeDaily(batch, "ts", path)
+      None
+    }
+
+  /** The one shape of every foreachBatch sink: register `key` with the
+    * monitor, run `body` on each micro-batch (with its batch id), then
+    * record the commit with the event-time frontier `body` returned
+    * (None: an event-timeless sink or an empty batch — it proves the
+    * sink alive and moves no frontier). The record happens only AFTER
+    * `body` returned, i.e. after the store committed: the gauge tracks
+    * the authority's freshness, so a crash between commit and record
+    * reads stale (the safe direction), never fresh-but-missing. */
+  private[graft] def sink(stream: DataFrame, key: String, checkpoint: String,
+      monitor: Option[graft.ops.Monitoring.FreshnessMonitor])(
+      body: (DataFrame, Long) => Option[Long]
+  ): org.apache.spark.sql.streaming.StreamingQuery = {
+    monitor.foreach(_.register(key))
     stream.writeStream
       .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        graft.sources.Sinks.writeDaily(batch.toDF(), "ts", path)
+      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
+        val frontier = body(batch.toDF(), batchId)
+        monitor.foreach(_.record(key, frontier))
       }
       .start()
+  }
 
   /** Streaming incremental dedup-insert: every micro-batch upserts into
     * a persistent date-partitioned historic parquet table with the
@@ -954,22 +974,12 @@ object EventStream {
   def dedupInsertStream(stream: DataFrame, path: String, checkpoint: String,
       keys: Seq[String], tsCol: String = "ts",
       monitor: Option[graft.ops.Monitoring.FreshnessMonitor] = None
-  ): org.apache.spark.sql.streaming.StreamingQuery = {
-    monitor.foreach(_.register(path))
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        // the upsert's own bounds pass returns the event-time frontier
-        // (no second scan of the micro-batch source per commit; None
-        // for an empty batch — proves the sink alive, moves no frontier)
-        val frontier = graft.sources.Sinks.upsertHistoric(batch.toDF(), path, keys, tsCol)
-        // AFTER the store committed: the gauge tracks the authority's
-        // freshness, so a crash between upsert and record reads stale
-        // (safe direction) rather than fresh-but-missing
-        monitor.foreach(_.record(path, frontier))
-      }
-      .start()
-  }
+  ): org.apache.spark.sql.streaming.StreamingQuery =
+    // the upsert's own bounds pass returns the event-time frontier (no
+    // second scan of the micro-batch source per commit)
+    sink(stream, path, checkpoint, monitor) { (batch, _) =>
+      graft.sources.Sinks.upsertHistoric(batch, path, keys, tsCol)
+    }
 
   /** Streaming incremental NEAR-dup dedup: every micro-batch is
     * MinHash-banded against the persisted historic band index, verified
@@ -985,19 +995,13 @@ object EventStream {
       threshold: Double = 0.8, blockCols: Seq[String] = Seq("lang", "source"),
       buckets: Int = 64, bucketedIndex: Boolean = false,
       monitor: Option[graft.ops.Monitoring.FreshnessMonitor] = None
-  ): org.apache.spark.sql.streaming.StreamingQuery = {
-    monitor.foreach(_.register(root))
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        graft.operators.IncrementalDedup.upsertBatch(
-          batch.toDF(), root, threshold, blockCols, buckets,
-          bucketedIndex = bucketedIndex)
-        // doc batches carry no event-time column: commit-age gauge only
-        monitor.foreach(_.record(root))
-      }
-      .start()
-  }
+  ): org.apache.spark.sql.streaming.StreamingQuery =
+    sink(stream, root, checkpoint, monitor) { (batch, _) =>
+      graft.operators.IncrementalDedup.upsertBatch(
+        batch, root, threshold, blockCols, buckets,
+        bucketedIndex = bucketedIndex)
+      None // doc batches carry no event-time column: commit-age gauge only
+    }
 
   /** Streaming CURATED corpus ingestion: the full training-data intake
     * path as one sink — each micro-batch runs the stateless curation
@@ -1037,19 +1041,15 @@ object EventStream {
       g.count()
       g
     }
-    monitor.foreach(_.register(root))
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val curated = graft.operators.CorpusPipeline.curateBatch(
-          batch.toDF(), benchGrams, minWords, maxRepFrac, qualityModel,
-          bloomBits = benchBloom)
-        graft.operators.IncrementalDedup.upsertBatch(
-          curated, root, threshold, blockCols, buckets,
-          bucketedIndex = bucketedIndex)
-        monitor.foreach(_.record(root))
-      }
-      .start()
+    sink(stream, root, checkpoint, monitor) { (batch, _) =>
+      val curated = graft.operators.CorpusPipeline.curateBatch(
+        batch, benchGrams, minWords, maxRepFrac, qualityModel,
+        bloomBits = benchBloom)
+      graft.operators.IncrementalDedup.upsertBatch(
+        curated, root, threshold, blockCols, buckets,
+        bucketedIndex = bucketedIndex)
+      None
+    }
   }
 
   /** Streaming ANN-index maintenance: each micro-batch of new
@@ -1068,16 +1068,11 @@ object EventStream {
       checkpoint: String,
       onDrift: graft.operators.Similarity.IvfDrift => Unit = _ => (),
       monitor: Option[graft.ops.Monitoring.FreshnessMonitor] = None
-  ): org.apache.spark.sql.streaming.StreamingQuery = {
-    monitor.foreach(_.register(path))
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        onDrift(graft.operators.Similarity.appendToIvfIndex(batch.toDF(), cents, path))
-        monitor.foreach(_.record(path))
-      }
-      .start()
-  }
+  ): org.apache.spark.sql.streaming.StreamingQuery =
+    sink(stream, path, checkpoint, monitor) { (batch, _) =>
+      onDrift(graft.operators.Similarity.appendToIvfIndex(batch, cents, path))
+      None
+    }
 
   /** Streaming HARD-TRIPLET mining — continual training-data
     * generation for retrieval models (the streaming face of d71):
@@ -1104,15 +1099,9 @@ object EventStream {
     *
     * The manifest is hive-partitioned by
     * `abucket = pmod(hash(anchor_id), manifestBuckets)` and the
-    * restart guard reads it through [[graft.sources.Sinks.readPruned]]:
-    * bucket-dir prune (only the batch's anchor buckets are listed)
-    * plus per-file anchor_id footer-stats pruning against the batch's
-    * id box — manifest files cluster by insertion batch, so a
-    * REPLAYED batch touches exactly the files its failed attempt
-    * wrote and a fresh monotone-id batch skips the entire history,
-    * instead of anti-joining a manifest scan that grows with corpus
-    * lifetime (the IncrementalDedup.upsertBatch guard discipline).
-    * Duplicate vec_ids within a micro-batch resolve to the
+    * restart guard is [[graft.sources.Sinks.unseen]] keyed on
+    * anchor_id, so its cost follows the batch, not the manifest's
+    * lifetime. Duplicate vec_ids within a micro-batch resolve to the
     * (hash(embedding), embedding)-min row — deterministic across
     * first deliveries, where an arbitrary dropDuplicates pick would
     * freeze a nondeterministic winner into index + manifest. */
@@ -1120,93 +1109,48 @@ object EventStream {
       indexPath: String, outPath: String, checkpoint: String,
       monitor: Option[graft.ops.Monitoring.FreshnessMonitor] = None,
       manifestBuckets: Int = 64
-  ): org.apache.spark.sql.streaming.StreamingQuery = {
-    monitor.foreach(_.register(outPath))
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val s = batch.sparkSession
-        val b = dedupVectors(batch.toDF()).localCheckpoint(eager = true)
-        graft.operators.Similarity.appendToIvfIndex(b, cents, indexPath): Unit
-        // ---- pruned restart guard: the manifest is the authority ---
-        val outP = new org.apache.hadoop.fs.Path(outPath)
-        val fs = outP.getFileSystem(s.sparkContext.hadoopConfiguration)
-        // a pre-r19 store is FLAT (no abucket partition): keep writing
-        // its layout (a partitioned append into a flat store leaves a
-        // mixed directory neither reader can parse) and skip the
-        // abucket dir prune — the anchor_id footer-box prune still
-        // applies to root-level files
-        val legacyStore = fs.exists(outP) &&
+  ): org.apache.spark.sql.streaming.StreamingQuery =
+    sink(stream, outPath, checkpoint, monitor) { (batch, _) =>
+      val s = batch.sparkSession
+      val b = dedupVectors(batch).localCheckpoint(eager = true)
+      graft.operators.Similarity.appendToIvfIndex(b, cents, indexPath): Unit
+      // a pre-r19 store is FLAT (no abucket partition): keep writing
+      // its layout (a partitioned append into a flat store leaves a
+      // mixed directory neither reader can parse); the guard reads its
+      // top-level files
+      val outP = new org.apache.hadoop.fs.Path(outPath)
+      val legacyStore =
+        outP.getFileSystem(s.sparkContext.hadoopConfiguration).exists(outP) &&
           !s.read.parquet(outPath).schema.fieldNames.contains("abucket")
-        val novel =
-          if (!fs.exists(outP)) b
-          else {
-            // ONE bounded driver action for both prune inputs
-            // (≤ manifestBuckets ints + the id box)
-            val stats = b.agg(
-              collect_set(pmod(hash(col("vec_id")), lit(manifestBuckets)))
-                .as("bks"),
-              min(col("vec_id")).as("lo"), max(col("vec_id")).as("hi"))
-              .head()
-            if (stats.isNullAt(1)) b.limit(0)
-            else {
-              val bks = stats.getSeq[Int](0)
-              val exact = 1L << 53
-              // box-prune only when ids are Longs inside the exact
-              // double range; otherwise degrade to a bucket-filtered
-              // scan — and only filter on abucket when the store HAS
-              // it (a pre-partitioned legacy manifest doesn't)
-              val longIds = b.schema("vec_id").dataType ==
-                org.apache.spark.sql.types.LongType
-              val boxed =
-                if (!longIds) None
-                else {
-                  val (lo, hi) = (stats.getLong(1), stats.getLong(2))
-                  if (lo <= -exact || hi >= exact) None else Some((lo, hi))
-                }
-              val seen = boxed match {
-                case Some((lo, hi)) =>
-                  val keepDirs: String => Boolean =
-                    if (legacyStore) _ => true
-                    else bks.map(bk => s"abucket=$bk").toSet
-                  graft.sources.Sinks.readPruned(s, outPath,
-                      Seq(("anchor_id", lo.toDouble, hi.toDouble)), keepDirs)
-                    .select("anchor_id")
-                case None =>
-                  val manifest = s.read.parquet(outPath)
-                  val scoped =
-                    if (legacyStore) manifest
-                    else manifest.filter(col("abucket").isin(bks: _*))
-                  scoped.select("anchor_id")
-              }
-              b.join(seen, col("vec_id") === seen("anchor_id"), "left_anti")
-            }
-          }
-        if (!novel.isEmpty) {
-          // full manifest: scored anchors with nullable sides, plus a
-          // left join so even zero-candidate anchors get their row;
-          // mining runs on NOVEL anchors only (replays skip it)
-          val trips = novel.select(col("vec_id").as("anchor_id"))
-            .join(graft.operators.Similarity.hardTripletsAgainst(
-              novel, s.read.parquet(indexPath), cents, requireBoth = false),
-              Seq("anchor_id"), "left")
-          if (legacyStore)
-            trips.write.mode("append").parquet(outPath)
-          else {
-            // repartition on the partition column FIRST (the tasks×dirs
-            // tiny-file rule): one file set per insertion batch
-            trips
-              .withColumn("abucket",
-                pmod(hash(col("anchor_id")), lit(manifestBuckets)))
-              .repartition(col("abucket"))
-              .write.mode("append").partitionBy("abucket").parquet(outPath)
-          }
+      // ---- restart guard: the manifest is the authority ----
+      val novel = graft.sources.Sinks.unseen(
+          b.withColumnRenamed("vec_id", "anchor_id"),
+          pmod(hash(col("anchor_id")), lit(manifestBuckets)), outPath, "abucket",
+          Seq("anchor_id"))
+        .withColumnRenamed("anchor_id", "vec_id")
+      if (!novel.isEmpty) {
+        // full manifest: scored anchors with nullable sides, plus a
+        // left join so even zero-candidate anchors get their row;
+        // mining runs on NOVEL anchors only (replays skip it)
+        val trips = novel.select(col("vec_id").as("anchor_id"))
+          .join(graft.operators.Similarity.hardTripletsAgainst(
+            novel, s.read.parquet(indexPath), cents, requireBoth = false),
+            Seq("anchor_id"), "left")
+        if (legacyStore)
+          trips.write.mode("append").parquet(outPath)
+        else {
+          // repartition on the partition column FIRST (the tasks×dirs
+          // tiny-file rule): one file set per insertion batch
+          trips
+            .withColumn("abucket",
+              pmod(hash(col("anchor_id")), lit(manifestBuckets)))
+            .repartition(col("abucket"))
+            .write.mode("append").partitionBy("abucket").parquet(outPath)
         }
-        b.unpersist()
-        monitor.foreach(_.record(outPath))
       }
-      .start()
-  }
+      b.unpersist()
+      None
+    }
 
   /** Deterministic within-batch duplicate pick for (vec_id, embedding)
     * vector batches: the (hash(embedding), embedding)-min row wins —
@@ -1254,9 +1198,10 @@ object EventStream {
     * Replay-idempotent WITHOUT a log guard: a re-delivered batch
     * appends byte-identical (q_id, vec_id, cos) rows, which collapse
     * in the view's max-cos dedup before the top-k — duplicates can
-    * never occupy two slots. The index append keeps its own guard;
-    * duplicate subscription rows likewise only duplicate candidate
-    * rows, which collapse. Bootstrap: stream history through an empty
+    * never occupy two slots. The index append and the subscription
+    * append are each guarded by [[graft.sources.Sinks.unseen]] (the
+    * subscriptions keyed on (vec_id, pbucket)); a duplicate that slips
+    * past a crash only duplicates candidate rows, which collapse. Bootstrap: stream history through an empty
     * index — pre-loaded index vectors without subscription rows would
     * never gain retro updates.
     *
@@ -1277,145 +1222,104 @@ object EventStream {
       checkpoint: String, kNeighbors: Int = 5, multiAssign: Int = 2,
       monitor: Option[graft.ops.Monitoring.FreshnessMonitor] = None,
       compactEvery: Int = 0
-  ): org.apache.spark.sql.streaming.StreamingQuery = {
-    monitor.foreach(_.register(logPath))
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val s = batch.sparkSession
-        val Sim = graft.operators.Similarity
-        val b = dedupVectors(batch.toDF()).localCheckpoint(eager = true)
-        if (!b.isEmpty) {
-          Sim.appendToIvfIndex(b, cents, indexPath): Unit
-          // batch probe rows: (vec_id, embedding, pbucket) × multiAssign
-          val probes = b.select(col("vec_id"), col("embedding"),
-              explode(graft.functions.VectorExprs.nearestBuckets(
-                col("embedding"), Sim.centroidSetOf(cents), multiAssign,
-                cosine = false)).as("nb"))
-            .select(col("vec_id"), col("embedding"),
-              col("nb.bucket").as("pbucket"))
-            .localCheckpoint(eager = true)
-          // ---- subscription append (guarded like the manifest) ----
-          val subP = new org.apache.hadoop.fs.Path(subPath)
-          val fs = subP.getFileSystem(s.sparkContext.hadoopConfiguration)
-          val subNovel =
-            if (!fs.exists(subP)) probes
-            else {
-              val stats = probes.agg(
-                collect_set(col("pbucket")).as("bks"),
-                min(col("vec_id")).as("lo"), max(col("vec_id")).as("hi"))
-                .head()
-              // a non-empty batch can still probe NOTHING (all-null
-              // embeddings drop in the nearestBuckets explode) — the
-              // min/max unbox below would NPE the streaming query
-              if (stats.isNullAt(1)) probes.limit(0)
-              else {
-                val bks = stats.getSeq[Int](0)
-                val exact = 1L << 53
-                val longIds = probes.schema("vec_id").dataType ==
-                  org.apache.spark.sql.types.LongType
-                val boxed =
-                  if (!longIds) None
-                  else {
-                    val (lo, hi) = (stats.getLong(1), stats.getLong(2))
-                    if (lo <= -exact || hi >= exact) None
-                    else Some((lo, hi))
-                  }
-                val seen = boxed match {
-                  case Some((lo, hi)) =>
-                    graft.sources.Sinks.readPruned(s, subPath,
-                        Seq(("vec_id", lo.toDouble, hi.toDouble)),
-                        bks.map(bk => s"pbucket=$bk").toSet)
-                      .select("vec_id", "pbucket")
-                  case None =>
-                    s.read.parquet(subPath)
-                      .filter(col("pbucket").isin(bks: _*))
-                      .select("vec_id", "pbucket")
-                }
-                // cut: consumed by both the isEmpty probe and the write
-                // (the multi-consumed-frame rule — the anti-join's
-                // pruned read must not run twice per micro-batch)
-                probes.join(seen, Seq("vec_id", "pbucket"), "left_anti")
-                  .localCheckpoint(eager = true)
-              }
-            }
-          if (!subNovel.isEmpty)
-            subNovel.repartition(col("pbucket"))
-              .write.mode("append").partitionBy("pbucket").parquet(subPath)
-          if (!(subNovel eq probes)) subNovel.unpersist()
-          // ---- insertion-time mining: batch anchors vs the post-
-          // append index, restricted to their probe buckets ----------
-          val pbks = probes.select("pbucket").distinct()
-            .collect().map(_.getInt(0)).toSeq
-          val idx = s.read.parquet(indexPath)
-            .filter(col("bucket").isin(pbks: _*))
-            .select(col("vec_id").as("c_id"), col("embedding").as("v_b"),
-              col("bucket").as("pbucket"))
-          val own = probes
-            .select(col("vec_id").as("q_id"), col("embedding").as("v_a"),
-              col("pbucket"))
-            .join(idx, Seq("pbucket"))
-            .filter(col("q_id") =!= col("c_id"))
-          // ---- retro mining: earlier subscribed anchors vs the
-          // batch's single-assigned vectors (partition-pruned read;
-          // same-batch anchors excluded — insertion mining covers
-          // them, and identical re-appends would only collapse) ------
-          val assigned = b.join(
-            Sim.assign(b, cents).select("vec_id", "bucket"), "vec_id")
-          val sbks = assigned.select("bucket").distinct()
-            .collect().map(_.getInt(0)).toSeq
-          val subs = s.read.parquet(subPath)
-            .filter(col("pbucket").isin(sbks: _*))
-            .join(b.select("vec_id"), Seq("vec_id"), "left_anti")
-            .select(col("vec_id").as("q_id"), col("embedding").as("v_a"),
-              col("pbucket"))
-          val retro = subs.join(
-              assigned.select(col("vec_id").as("c_id"),
-                col("embedding").as("v_b"), col("bucket").as("pbucket")),
-              Seq("pbucket"))
-            .filter(col("q_id") =!= col("c_id"))
-          // per-(anchor, batch) top-k append; multi-probe duplicate
-          // (q, c) scores are identical, max-dedup before the cut
-          def nrm(c: org.apache.spark.sql.Column) =
-            sqrt(graft.functions.VectorExprs.dotF(c, c))
-          val contrib = own.unionByName(retro)
-            .withColumn("cos",
-              graft.functions.VectorExprs.dotF(col("v_a"), col("v_b"))
-                / (nrm(col("v_a")) * nrm(col("v_b"))))
-            .groupBy(col("q_id"), col("c_id").as("vec_id"))
-            .agg(max(col("cos")).as("cos"))
-          // cut: consumed by both the isEmpty probe and the write —
-          // without it the whole own∪retro mining join runs twice
-          val topk = contrib
-            .groupBy("q_id")
-            .agg(graft.functions.TopKAgg.topKByScore(
-              struct(col("cos"), col("vec_id")), kNeighbors).as("top"))
-            .select(col("q_id"), explode(col("top")).as("t"))
-            .select(col("q_id"), col("t.id").as("vec_id"),
-              col("t.score").as("cos"))
-            .localCheckpoint(eager = true)
-          if (!topk.isEmpty)
-            topk.write.mode("append").parquet(logPath)
-          topk.unpersist()
-          probes.unpersist()
-        }
-        b.unpersist()
-        if (compactEvery > 0 && (batchId + 1) % compactEvery == 0) {
-          Sim.compactKnnLog(s, logPath, kNeighbors)
-          // the subscription and index stores accrete ≤ one file per
-          // touched partition per batch, and BOTH are re-read every
-          // batch — measured on the ScaleSmoke 20-batch stage, footer
-          // scans over the accreted files (not pair volume) grew the
-          // per-batch wall 15.7 → 68.2 s. compactAppendOnly is the
-          // crash-safe fix (duplicates-only at every crash point —
-          // both stores' consumers collapse duplicates by contract)
-          graft.sources.Sinks.compactAppendOnly(s, subPath, "pbucket"): Unit
-          graft.sources.Sinks.compactAppendOnly(s, indexPath, "bucket"): Unit
-        }
-        monitor.foreach(_.record(logPath))
+  ): org.apache.spark.sql.streaming.StreamingQuery =
+    sink(stream, logPath, checkpoint, monitor) { (batch, batchId) =>
+      val s = batch.sparkSession
+      val Sim = graft.operators.Similarity
+      val b = dedupVectors(batch).localCheckpoint(eager = true)
+      if (!b.isEmpty) {
+        Sim.appendToIvfIndex(b, cents, indexPath): Unit
+        // batch probe rows: (vec_id, embedding, pbucket) × multiAssign
+        val probes = b.select(col("vec_id"), col("embedding"),
+            explode(graft.functions.VectorExprs.nearestBuckets(
+              col("embedding"), Sim.centroidSetOf(cents), multiAssign,
+              cosine = false)).as("nb"))
+          .select(col("vec_id"), col("embedding"),
+            col("nb.bucket").as("pbucket"))
+          .localCheckpoint(eager = true)
+        // ---- subscription append: Sinks.unseen on (vec_id, pbucket).
+        // Cut the guarded frame: the isEmpty probe and the write both
+        // consume it, and the guard's pruned read must not run twice
+        // per micro-batch (a missing store returns `probes`, already cut)
+        val guarded = graft.sources.Sinks.unseen(probes, col("pbucket"), subPath,
+          "pbucket", Seq("vec_id", "pbucket"))
+        val subNovel =
+          if (guarded eq probes) probes else guarded.localCheckpoint(eager = true)
+        if (!subNovel.isEmpty)
+          subNovel.repartition(col("pbucket"))
+            .write.mode("append").partitionBy("pbucket").parquet(subPath)
+        if (!(subNovel eq probes)) subNovel.unpersist()
+        // ---- insertion-time mining: batch anchors vs the post-
+        // append index, restricted to their probe buckets ----------
+        val pbks = probes.select("pbucket").distinct()
+          .collect().map(_.getInt(0)).toSeq
+        val idx = s.read.parquet(indexPath)
+          .filter(col("bucket").isin(pbks: _*))
+          .select(col("vec_id").as("c_id"), col("embedding").as("v_b"),
+            col("bucket").as("pbucket"))
+        val own = probes
+          .select(col("vec_id").as("q_id"), col("embedding").as("v_a"),
+            col("pbucket"))
+          .join(idx, Seq("pbucket"))
+          .filter(col("q_id") =!= col("c_id"))
+        // ---- retro mining: earlier subscribed anchors vs the
+        // batch's single-assigned vectors (partition-pruned read;
+        // same-batch anchors excluded — insertion mining covers
+        // them, and identical re-appends would only collapse) ------
+        val assigned = b.join(
+          Sim.assign(b, cents).select("vec_id", "bucket"), "vec_id")
+        val sbks = assigned.select("bucket").distinct()
+          .collect().map(_.getInt(0)).toSeq
+        val subs = s.read.parquet(subPath)
+          .filter(col("pbucket").isin(sbks: _*))
+          .join(b.select("vec_id"), Seq("vec_id"), "left_anti")
+          .select(col("vec_id").as("q_id"), col("embedding").as("v_a"),
+            col("pbucket"))
+        val retro = subs.join(
+            assigned.select(col("vec_id").as("c_id"),
+              col("embedding").as("v_b"), col("bucket").as("pbucket")),
+            Seq("pbucket"))
+          .filter(col("q_id") =!= col("c_id"))
+        // per-(anchor, batch) top-k append; multi-probe duplicate
+        // (q, c) scores are identical, max-dedup before the cut
+        def nrm(c: org.apache.spark.sql.Column) =
+          sqrt(graft.functions.VectorExprs.dotF(c, c))
+        val contrib = own.unionByName(retro)
+          .withColumn("cos",
+            graft.functions.VectorExprs.dotF(col("v_a"), col("v_b"))
+              / (nrm(col("v_a")) * nrm(col("v_b"))))
+          .groupBy(col("q_id"), col("c_id").as("vec_id"))
+          .agg(max(col("cos")).as("cos"))
+        // cut: consumed by both the isEmpty probe and the write —
+        // without it the whole own∪retro mining join runs twice
+        val topk = contrib
+          .groupBy("q_id")
+          .agg(graft.functions.TopKAgg.topKByScore(
+            struct(col("cos"), col("vec_id")), kNeighbors).as("top"))
+          .select(col("q_id"), explode(col("top")).as("t"))
+          .select(col("q_id"), col("t.id").as("vec_id"),
+            col("t.score").as("cos"))
+          .localCheckpoint(eager = true)
+        if (!topk.isEmpty)
+          topk.write.mode("append").parquet(logPath)
+        topk.unpersist()
+        probes.unpersist()
       }
-      .start()
-  }
+      b.unpersist()
+      if (compactEvery > 0 && (batchId + 1) % compactEvery == 0) {
+        Sim.compactKnnLog(s, logPath, kNeighbors)
+        // the subscription and index stores accrete ≤ one file per
+        // touched partition per batch, and BOTH are re-read every
+        // batch — measured on the ScaleSmoke 20-batch stage, footer
+        // scans over the accreted files (not pair volume) grew the
+        // per-batch wall 15.7 → 68.2 s. compactAppendOnly is the
+        // crash-safe fix (duplicates-only at every crash point —
+        // both stores' consumers collapse duplicates by contract)
+        graft.sources.Sinks.compactAppendOnly(s, subPath, "pbucket"): Unit
+        graft.sources.Sinks.compactAppendOnly(s, indexPath, "bucket"): Unit
+      }
+      None
+    }
 
   /** Streaming SELF-EMBEDDING index maintenance: each micro-batch of
     * raw (doc_id, text) docs is hashed-embedded IN-ENGINE
@@ -1430,18 +1334,12 @@ object EventStream {
       checkpoint: String,
       onDrift: graft.operators.Similarity.IvfDrift => Unit = _ => (),
       monitor: Option[graft.ops.Monitoring.FreshnessMonitor] = None
-  ): org.apache.spark.sql.streaming.StreamingQuery = {
-    monitor.foreach(_.register(path))
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val emb = graft.operators.Retrieval.denseEmbedOf(
-          batch.toDF().select("doc_id", "text"))
-        onDrift(graft.operators.Similarity.appendToIvfIndex(emb, cents, path))
-        monitor.foreach(_.record(path))
-      }
-      .start()
-  }
+  ): org.apache.spark.sql.streaming.StreamingQuery =
+    sink(stream, path, checkpoint, monitor) { (batch, _) =>
+      val emb = graft.operators.Retrieval.denseEmbedOf(batch.select("doc_id", "text"))
+      onDrift(graft.operators.Similarity.appendToIvfIndex(emb, cents, path))
+      None
+    }
 
   /** Streaming corpus-health monitor: each micro-batch of docs is
     * rolled up by the d47 report (volumes, mean size, exact-dup rate,
@@ -1456,24 +1354,19 @@ object EventStream {
     */
   def corpusHealthStream(stream: DataFrame, path: String, checkpoint: String,
       monitor: Option[graft.ops.Monitoring.FreshnessMonitor] = None
-  ): org.apache.spark.sql.streaming.StreamingQuery = {
-    monitor.foreach(_.register(path))
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val report = graft.operators.CorpusStats
-          .corpusReportOf(batch.toDF().select("lang", "source", "text"))
-          .withColumn("batch_id", lit(batchId))
-        // dynamic overwrite scoped to this write (a session conf.set
-        // would leak changed overwrite semantics to later writes);
-        // report is group-cardinality tiny; one file per partition dir
-        report.repartition(col("batch_id"))
-          .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id").parquet(path)
-        monitor.foreach(_.record(path))
-      }
-      .start()
-  }
+  ): org.apache.spark.sql.streaming.StreamingQuery =
+    sink(stream, path, checkpoint, monitor) { (batch, batchId) =>
+      val report = graft.operators.CorpusStats
+        .corpusReportOf(batch.select("lang", "source", "text"))
+        .withColumn("batch_id", lit(batchId))
+      // dynamic overwrite scoped to this write (a session conf.set
+      // would leak changed overwrite semantics to later writes);
+      // report is group-cardinality tiny; one file per partition dir
+      report.repartition(col("batch_id"))
+        .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+        .partitionBy("batch_id").parquet(path)
+      None
+    }
 
   case class DocIn(doc_id: Long, source: String, n_tok: Int)
   case class PackedDoc(source: String, doc_id: Long, n_tok: Int,

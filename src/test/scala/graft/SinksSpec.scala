@@ -1,6 +1,10 @@
 package graft
 
 import java.nio.file.Files
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.sources.Sinks
@@ -322,5 +326,127 @@ class SinksSpec extends SparkSpec {
     val gotU = Sinks.readPruned(spark, dir, uid)
     val expU = spark.read.parquet(dir).filter(col("user_id").between(0, 5))
     assert(gotU.exceptAll(expU).count() == 0 && expU.exceptAll(gotU).count() == 0)
+  }
+
+  // ---- Sinks.unseen: the one replay guard ---------------------------
+
+  /** Driver actions `body` runs on this thread, counted by a
+    * SparkListener: jobs of one SQL execution count once (AQE submits an
+    * action's shuffle map stages as jobs of their own), every other job
+    * (e.g. a schema-inference or listing job) counts by itself. */
+  private def actionsOf[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val group = "graft-unseen-" + java.util.UUID.randomUUID()
+    val actions = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val fenced = new CountDownLatch(1)
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val props = Option(e.properties)
+        props.map(_.getProperty("spark.jobGroup.id")).orNull match {
+          case `group` => actions.add(props.flatMap(p =>
+            Option(p.getProperty("spark.sql.execution.id"))).fold(s"job ${e.jobId}")("sql " + _))
+          case g if g == group + "-fence" => fenced.countDown()
+          case _ =>
+        }
+      }
+    }
+    sc.addSparkListener(l)
+    try {
+      sc.setJobGroup(group, "counted")
+      val r = try body finally sc.clearJobGroup()
+      // the bus delivers events in order: once the fence job's start
+      // arrived, every counted job's start arrived before it
+      sc.setJobGroup(group + "-fence", "fence")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(fenced.await(60, TimeUnit.SECONDS), "listener bus did not drain")
+      (r, actions.size)
+    } finally sc.removeSparkListener(l)
+  }
+
+  private val bucketOf = pmod(col("id"), lit(8)).cast("int")
+
+  /** A `bucket`-partitioned store of `ids` (bucket = id mod 8), one
+    * append per id group so files cluster by batch, like the sinks. */
+  private def bucketStore[T](ids: Seq[Seq[T]], toDf: Seq[T] => DataFrame): String = {
+    val path = Files.createTempDirectory("graft_unseen").toString + "/store"
+    ids.foreach { g =>
+      toDf(g).withColumn("bucket", bucketOf).repartition(col("bucket"))
+        .write.mode("append").partitionBy("bucket").parquet(path)
+    }
+    path
+  }
+
+  test("Sinks.unseen: no job on a missing store, exactly one action on an existing one") {
+    import spark.implicits._
+    val batch = (0L until 40L).map(i => (i, s"r$i")).toDF("id", "payload")
+    val missing = Files.createTempDirectory("graft_unseen_none").toString + "/store"
+    val (same, none) = actionsOf(Sinks.unseen(batch, bucketOf, missing, "bucket", Seq("id")))
+    assert(none == 0 && (same eq batch), s"missing store ran $none actions")
+
+    val path = bucketStore[Long](Seq(0L until 20L), _.toDF("id"))
+    val (fresh, one) = actionsOf(Sinks.unseen(batch, bucketOf, path, "bucket", Seq("id")))
+    assert(one == 1, s"guard on an existing store ran $one actions")
+    assert(fresh.select("id").as[Long].collect().toSet == (20L until 40L).toSet)
+  }
+
+  test("Sinks.unseen lists only the batch's bucket dirs") {
+    import spark.implicits._
+    val path = bucketStore[Long](Seq(0L until 40L, 40L until 80L), _.toDF("id"))
+    val intPath = bucketStore[Int](Seq(0 until 40, 40 until 80), _.toDF("id"))
+    // every id is ≡ 1 or 3 (mod 8): buckets 1 and 3 only
+    val ids = (0 until 80).filter(i => i % 8 == 1 || i % 8 == 3)
+    def readDirs(df: DataFrame): Set[String] =
+      df.inputFiles.map(f => new org.apache.hadoop.fs.Path(f).getParent.getName).toSet
+    val longRead = readDirs(Sinks.unseen(ids.map(_.toLong).toDF("id"), bucketOf, path,
+      "bucket", Seq("id")))
+    val intRead = readDirs(Sinks.unseen(ids.toDF("id"), bucketOf, intPath,
+      "bucket", Seq("id")))
+    assert(longRead == Set("bucket=1", "bucket=3"), longRead)
+    assert(intRead == Set("bucket=1", "bucket=3"), intRead)
+  }
+
+  test("Sinks.unseen: ids >= 2^53 and Int ids return the same rows as an unpruned left_anti") {
+    import spark.implicits._
+    val big = 1L << 53
+    def check(path: String, batch: DataFrame): Unit = {
+      val want = batch.join(spark.read.parquet(path).select("id"), Seq("id"), "left_anti")
+      val got = Sinks.unseen(batch, bucketOf, path, "bucket", Seq("id"))
+      assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty,
+        s"unseen differs from left_anti at $path")
+      assert(!want.isEmpty && want.count() < batch.count(), "batch must straddle the store")
+    }
+    val bigPath = bucketStore[Long](Seq((0L until 30L).map(big + _)), _.toDF("id"))
+    check(bigPath, (20L until 50L).map(i => (big + i, s"r$i")).toDF("id", "payload"))
+    val intPath = bucketStore[Int](Seq(0 until 30), _.toDF("id"))
+    check(intPath, (20 until 50).map(i => (i, s"r$i")).toDF("id", "payload"))
+  }
+
+  test("replaying a batch with ids >= 2^53 into upsertBatch and appendToIvfIndex appends nothing") {
+    import graft.operators.{IncrementalDedup, Similarity}
+    val big = 1L << 53
+    val root = Files.createTempDirectory("graft_unseen_inc").toString
+    val docs = Tables.documents(spark, sf).select("doc_id", "lang", "source", "text")
+      .withColumn("doc_id", col("doc_id") + lit(big))
+    val n = docs.count()
+    val b1 = docs.filter(col("doc_id") < lit(big + n / 2))
+    val b2 = docs.filter(col("doc_id") >= lit(big + n / 2))
+    IncrementalDedup.upsertBatch(b1, root)
+    IncrementalDedup.upsertBatch(b2, root)
+    val stored = spark.read.parquet(s"$root/docs").count()
+    IncrementalDedup.upsertBatch(b2, root)
+    assert(spark.read.parquet(s"$root/docs").count() == stored,
+      "replayed upsertBatch appended rows")
+    IncrementalDedup.dropStore(spark, root)
+
+    val emb = Tables.embeddings(spark, sf).select("vec_id", "embedding")
+    val idx = Files.createTempDirectory("graft_unseen_ivf").toString + "/idx"
+    val cents = Similarity.buildIvfIndex(emb.filter(col("vec_id") < 50), k = 4, iters = 2, idx)
+    val e2 = emb.filter(col("vec_id") >= 50 && col("vec_id") < 100)
+      .withColumn("vec_id", col("vec_id") + lit(big))
+    Similarity.appendToIvfIndex(e2, cents, idx): Unit
+    val indexed = spark.read.parquet(idx).count()
+    Similarity.appendToIvfIndex(e2, cents, idx): Unit
+    assert(indexed == 100L && spark.read.parquet(idx).count() == indexed,
+      "replayed appendToIvfIndex appended rows")
   }
 }

@@ -4,10 +4,13 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Source guards over src/main: one session factory (graft.Harness) and
-  * one checkpoint policy (graft.ops.Checkpoints). A second
-  * `SparkSession.builder` or an operator that picks its own reliable
-  * cut or checkpoint dir fails here, before it can drift. */
+/** Source guards over src/main: one session factory (graft.Harness),
+  * one checkpoint policy (graft.ops.Checkpoints), one sink replay guard
+  * (graft.sources.Sinks.unseen) and one layout marker
+  * (graft.ops.Artifacts). A second `SparkSession.builder`, an operator
+  * that picks its own reliable cut or checkpoint dir, a hand-rolled
+  * pruned guard or a hand-written `_layout` fails here, before it can
+  * drift. */
 class SourceGuardSpec extends AnyFunSuite {
 
   private val root = java.nio.file.Paths.get("src/main/scala")
@@ -38,5 +41,15 @@ class SourceGuardSpec extends AnyFunSuite {
     assert(bad.isEmpty,
       "cut through graft.ops.Checkpoints.cut; install a dir only at session start:\n" +
         bad.mkString("\n"))
+  }
+
+  test("one replay guard and one layout marker: pruned guard reads only in " +
+      "sources/Sinks, _layout paths only in ops/Artifacts") {
+    val guard = offenders(Seq("readPruned(", "1L << 53"))((f, _) => f == "graft/sources/Sinks.scala")
+    assert(guard.isEmpty,
+      "guard a store-authority sink with graft.sources.Sinks.unseen:\n" + guard.mkString("\n"))
+    val marker = offenders(Seq("/_layout\""))((f, _) => f == "graft/ops/Artifacts.scala")
+    assert(marker.isEmpty,
+      "read and write _layout markers through graft.ops.Artifacts:\n" + marker.mkString("\n"))
   }
 }
