@@ -41,8 +41,8 @@ object Amplify {
     // optional arg 4: bound parquet row groups to N MB. The harness's
     // single-file SINGLE-ROW-GROUP layout serializes every scan-bound
     // stage onto one task (row group = parquet's split atom — CLAUDE.md
-    // q54/d36 lessons); a bounded-row-group twin dir lets ScaleSmoke /
-    // the probes measure the same entries with a splittable input, i.e.
+    // q54/d36 lessons); a bounded-row-group twin dir lets the probes
+    // measure the same entries with a splittable input, i.e.
     // what the decode floors do on real multi-file cluster layouts.
     val rowGroupMB = if (args.length > 3) Some(args(3).toInt) else None
     val spark = Harness.session()

@@ -8,13 +8,13 @@ import org.apache.spark.sql.SparkSession
 /** Benchmark main: runs every SparkEntry query at the target scale
   * factor and prints one JSON line.
   *
-  * Queries run with modest concurrency (8 in flight, override with
-  * SPARK_GRAFT_BENCH_CONC): Spark's scheduler is built for concurrent
-  * jobs, and the suite wall-clock is the honest single-node throughput
-  * number — serial execution mostly measures 76× per-query
-  * planning/codegen latency, not engine throughput. Each in-flight
-  * query runs in its OWN fair-scheduler pool (set via the thread-local
-  * spark.scheduler.pool property): with FAIR mode the root pool
+  * Queries run with modest concurrency (always 8 in flight; the c8
+  * twin capture varies cores, not this): Spark's scheduler is built
+  * for concurrent jobs, and the suite wall-clock is the honest
+  * single-node throughput number — serial execution mostly measures
+  * 76× per-query planning/codegen latency, not engine throughput.
+  * Each in-flight query runs in its OWN fair-scheduler pool (set via
+  * the thread-local spark.scheduler.pool property): with FAIR mode the root pool
   * schedules pools fairly against each other, so one core-saturating
   * stage can't head-of-line-block every other query's small stages.
   * (spark.scheduler.mode=FAIR alone is NOT enough: all jobs land in
@@ -53,7 +53,6 @@ object Bench {
     // footer reads — so init cost isn't billed to the first query.
     spark.range(1000).selectExpr("sum(id)").collect()
     spark.read.parquet(s"$sfDir/lineitem.parquet").limit(1).count()
-    val conc = sys.env.getOrElse("SPARK_GRAFT_BENCH_CONC", "8").toInt
 
     // LPT-first submission: the known-heavy entries (iterative/composed
     // pipelines) start at t=0 and the cheap per-row queries fill the
@@ -131,7 +130,7 @@ object Bench {
       }
 
     def runSuite(): (Seq[(String, Double, Boolean)], Double, Double, Double) = {
-      val pool = Executors.newFixedThreadPool(conc)
+      val pool = Executors.newFixedThreadPool(8)
       implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
       val busy0 = procBusy()
       val io0 = psiIoFullUs()

@@ -5,8 +5,8 @@ import org.apache.spark.sql.SparkSession
 /** The one place graft's mains build a SparkSession: `local[cpus]`
   * with as many shuffle partitions as cores, UTC session time zone, UI
   * off, WARN logging. `cpus` is SPARK_GRAFT_CPUS, else the machine's
-  * core count. Callers that need more (Bench's FAIR scheduler,
-  * ScaleSmoke's wider shuffle) pass extra conf pairs, applied last.
+  * core count. Callers that need more (Bench's FAIR scheduler) pass
+  * extra conf pairs, applied last.
   */
 object Harness {
   def session(conf: (String, String)*): SparkSession = {

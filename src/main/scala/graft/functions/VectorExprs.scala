@@ -632,8 +632,8 @@ case class GopherAll(left: Expression, right: Expression,
   * Math.round(x·1e6) per element, the EXACT grid VectorSumAgg's
   * float/double update path applies. Pairs with VectorSumAgg's
   * array<long> input: a caller can quantize once into a projected
-  * column and sum pure longs. Measured r17 (interleaved A/B at the 1M
-  * ScaleSmoke stages): hoisting the quantization this way is
+  * column and sum pure longs. Measured r17 (interleaved A/B on 1M×64
+  * synthetic vectors): hoisting the quantization this way is
   * perf-NEUTRAL for the k-means/PQ loops (the in-update Math.round is
   * not a bottleneck — old 7.9/8.3 s vs hoisted 8.0/8.5 s pq train;
   * caching the extra long column for kmeans measured WORSE), so the
@@ -1462,7 +1462,6 @@ object VectorExprs {
   def sigAgree(a: Column, b: Column): Column = toCol(SigAgreeCount(toExpr(a), toExpr(b)))
   def packSigns64(c: Column): Column = toCol(PackSigns64(toExpr(c)))
   def simhash64(c: Column): Column = toCol(SimHash64(toExpr(c)))
-  def minhashSig(c: Column, k: Int): Column = toCol(MinHashSig(toExpr(c), k))
   def intersectCount(a: Column, b: Column): Column = toCol(IntersectCount(toExpr(a), toExpr(b)))
   def tokenBitset(c: Column, vocab: TokenVocab): Column = toCol(TokenBitset(toExpr(c), vocab))
   def hashBitset(c: Column, numBits: Int): Column = toCol(HashBitset(toExpr(c), numBits))

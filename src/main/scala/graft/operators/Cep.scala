@@ -21,8 +21,8 @@ import graft.Tables
   * count — fine through sf0.1/10× (≤ 700), infeasible at the 40× dir
   * (27k; killed at 85 CPU-minutes — DuckDB materializes every
   * iteration, the d20-at-40× class of oracle-infrastructure limit).
-  * Beyond that the gates are the driver-side reference automaton
-  * parity spec and the 10M-event ScaleSmoke stages.
+  * Beyond that the gate is the driver-side reference automaton
+  * parity spec.
   *
   * Scale shape: the per-key ordered scan IS the canonical CEP
   * execution model (Flink runs exactly this automaton per key);

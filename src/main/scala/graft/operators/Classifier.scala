@@ -60,12 +60,10 @@ object Classifier {
   /** Hashed-unigram tf features for the GRADIENT side: (doc_id,
     * bucket, x) with x = count/doc_len rounded to 9 dp (the rounding
     * is what makes the gradient's decimal sums order-independent).
-    * @param wordsIn optional pre-exploded (doc_id, w) word stream —
-    *   the registered entry passes the shared memoized
-    *   [[graft.Tables.tokLong]] slice (raw split, empties kept; the
-    *   empty filter below restores the exact multiset) instead of
-    *   re-exploding the corpus (r20: the tokLong rule applied to the
-    *   gradient-side posting build). */
+    * @param wordsIn optional pre-exploded (doc_id, w) word stream
+    *   used instead of splitting `docs`' text — [[trainLogistic]]
+    *   passes its labeled docs' word arrays (empties already removed,
+    *   so the empty filter below keeps the exact multiset). */
   def postingsOf(docs: DataFrame, buckets: Int,
       wordsIn: Option[DataFrame] = None): DataFrame = {
     val words = wordsIn
@@ -94,8 +92,7 @@ object Classifier {
     * (doc_id, y ∈ {0.0, 1.0}). Returns the model and the
     * per-iteration mean log-loss (monotone under a sane lr). */
   def trainLogistic(docs: DataFrame, labels: DataFrame, buckets: Int,
-      iters: Int = 8, lr: Double = 10.0, l2: Double = 1e-6,
-      wordsIn: Option[DataFrame] = None): Model = {
+      iters: Int = 8, lr: Double = 10.0, l2: Double = 1e-6): Model = {
     // both sides of the loop pinned once: the tokenized+labeled frame
     // for forward passes, the posting table for gradients — same
     // doc_id layout so the residual join stays co-partitioned.
@@ -118,7 +115,11 @@ object Classifier {
       .select(col("doc_id"), col("y"),
         array_remove(split(col("text"), " "), "").as("ws"))
       .repartition(parts, col("doc_id")).localCheckpoint(false)
-    val px = postingsOf(docs, buckets, wordsIn)
+    // postings of the LABELED docs only, from docsY's word arrays:
+    // the gradient's inner join drops every other doc anyway, and
+    // `parts` is sized for the labeled set, not the corpus
+    val px = postingsOf(docsY, buckets,
+        Some(docsY.select(col("doc_id"), explode(col("ws")).as("w"))))
       .repartition(parts, col("doc_id")).localCheckpoint(false)
     val w = new Array[Double](buckets)
     var bias = 0.0
@@ -272,8 +273,7 @@ object Classifier {
     val labels = ranked.crossJoin(broadcast(tot))
       .select(col("doc_id"),
         when(col("rnk") * 2 <= col("n"), 1.0).otherwise(0.0).as("y"))
-    val model = trainLogistic(docs, labels, QcBuckets, iters = 8, lr = 10.0,
-      wordsIn = Some(Tables.tokLong(s, d).select("doc_id", "w")))
+    val model = trainLogistic(docs, labels, QcBuckets, iters = 8, lr = 10.0)
     scoreOf(docs, model)
       .join(labels, "doc_id")
       .select(col("doc_id"), col("y").cast("int").as("label"),

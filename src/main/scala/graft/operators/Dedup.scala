@@ -786,8 +786,8 @@ object Dedup {
     // to a shuffle join if a pathological corpus makes them big).
     // vs self-joining the full posting table: both join sides shipped
     // all ~27 fingerprints/doc through SMJ sorts where ~99.9% of
-    // postings can never pair. Interleaved A/B on the 2M-long-doc
-    // ScaleSmoke stage: 1.7x faster (103 vs 175 s contended; parity at
+    // postings can never pair. Interleaved A/B on 2M synthetic long
+    // docs: 1.7x faster (103 vs 175 s contended; parity at
     // 1M where the join fits comfortably). A collect_list posting-list
     // formulation was also measured and REJECTED: 27M near-singleton
     // groups force ObjectHashAggregate and it lost to both shapes.

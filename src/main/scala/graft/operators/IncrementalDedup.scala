@@ -90,10 +90,10 @@ import org.apache.spark.sql.functions._
   * The bucket prune pays off for TRICKLE batches (few distinct band
   * hashes); a batch large enough to hit every bucket pays one narrow
   * pass over the whole band index per cycle (measured: 10k novel docs
-  * vs a 1M-doc store = 8.8 s, vs 38 s to re-bootstrap — ScaleSmoke's
-  * steady-state stage). That is the same cost profile as the
-  * reference's per-cycle anti-join against HISTORIC, and it amortizes
-  * the same way: batch the cycles (daily, not per-second).
+  * vs a 1M-doc store = 8.8 s, vs 38 s to re-bootstrap). That is the
+  * same cost profile as the reference's per-cycle anti-join against
+  * HISTORIC, and it amortizes the same way: batch the cycles (daily,
+  * not per-second).
   */
 object IncrementalDedup {
 

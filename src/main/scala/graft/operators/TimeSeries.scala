@@ -193,9 +193,8 @@ object TimeSeries {
     ohlcBarsOf(Tables.events(s, d)).orderBy("user_id", "bar")
 
   /** Core hourly-OHLC aggregation over any (user_id, ts, event_id,
-    * value) tick frame — shared by the q17 entry and the market-data
-    * ScaleSmoke chain (which feeds it from a parquet landing, the
-    * production path). */
+    * value) tick frame — the q17 entry's core, and what a parquet
+    * landing of the tick stream (the production path) feeds. */
   def ohlcBarsOf(ticks: DataFrame): DataFrame = {
     val ev = ticks.withColumn("bar", date_trunc("hour", col("ts")))
     val wAsc = Window.partitionBy("user_id", "bar").orderBy(col("ts").asc, col("event_id").asc)
@@ -223,8 +222,8 @@ object TimeSeries {
     verticalsOf(Tables.events(s, d)).orderBy("event_id")
 
   /** Core verticals build over any (event_id, user_id, ts, value) tick
-    * frame — shared by the q28 entry and the market-data ScaleSmoke
-    * chain. All windows share the user_id partitioning: ONE exchange. */
+    * frame — the q28 entry's core. All windows share the user_id
+    * partitioning: ONE exchange. */
   def verticalsOf(ticks: DataFrame): DataFrame = {
     val w = lit(10.0)
     val lagW = Window.partitionBy("user_id").orderBy("ts", "event_id")

@@ -1213,8 +1213,8 @@ object EventStream {
     * on the subscription and index stores — the two stores every
     * batch re-reads, whose per-batch file accretion (not pair volume)
     * measured as 15.7 → 68.2 s per-batch wall growth over 20
-    * uncompacted batches on the ScaleSmoke stage. At 0 the stores
-    * grow unboundedly in files and compaction is the caller's
+    * uncompacted batches of 2.5k vectors. At 0 the stores grow
+    * unboundedly in files and compaction is the caller's
     * scheduler contract — all three calls are safe between batches by
     * design. */
   def knnMaintainStream(stream: DataFrame, cents: DataFrame,
@@ -1310,7 +1310,7 @@ object EventStream {
         Sim.compactKnnLog(s, logPath, kNeighbors)
         // the subscription and index stores accrete ≤ one file per
         // touched partition per batch, and BOTH are re-read every
-        // batch — measured on the ScaleSmoke 20-batch stage, footer
+        // batch — measured over 20 batches of 2.5k vectors, footer
         // scans over the accreted files (not pair volume) grew the
         // per-batch wall 15.7 → 68.2 s. compactAppendOnly is the
         // crash-safe fix (duplicates-only at every crash point —

@@ -1,5 +1,9 @@
 package graft
 
+import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.LongAdder
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.functions._
 
 import graft.operators.Classifier
@@ -47,6 +51,64 @@ class ClassifierSpec extends SparkSpec {
     val m2 = Classifier.trainLogistic(dt, labels, 256, iters = 5, lr = 10.0)
     assert(m1.weights.toSeq == m2.weights.toSeq, "weights diverged across retrains")
     assert(m1.bias == m2.bias && m1.losses == m2.losses)
+  }
+
+  /** Shuffle records written by the jobs `body` runs on this thread. */
+  private def shuffleRecordsOf[T](body: => T): (T, Long) = {
+    val sc = spark.sparkContext
+    val group = "graft-qc-" + java.util.UUID.randomUUID()
+    val stages = ConcurrentHashMap.newKeySet[Integer]()
+    val written = new LongAdder
+    val fenced = new CountDownLatch(1)
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
+          case `group` => e.stageIds.foreach(id => stages.add(id))
+          case g if g == group + "-fence" => fenced.countDown()
+          case _ =>
+        }
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (stages.contains(e.stageId) && e.taskMetrics != null)
+          written.add(e.taskMetrics.shuffleWriteMetrics.recordsWritten)
+    }
+    sc.addSparkListener(l)
+    try {
+      sc.setJobGroup(group, "counted")
+      val r = try body finally sc.clearJobGroup()
+      // the bus delivers events in order: once the fence job's start
+      // arrived, every counted task's end arrived before it
+      sc.setJobGroup(group + "-fence", "fence")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(fenced.await(60, TimeUnit.SECONDS), "listener bus did not drain")
+      (r, written.sum())
+    } finally sc.removeSparkListener(l)
+  }
+
+  test("sparse labels: training posts only the labeled docs, same model as " +
+      "training over them alone") {
+    import spark.implicits._
+    // 2400 docs of 20 distinct words each (48k words); 10 carry a label
+    val nDocs = 2400L
+    val docs = spark.range(nDocs).select(col("id").as("doc_id"),
+      expr("""concat_ws(' ', transform(sequence(0, 19),
+             |  i -> concat('w', cast(id * 20 + i as string))))""".stripMargin)
+        .as("text")).cache()
+    docs.count()
+    val labels = (0L until 10L).map(i => (i * 240L, (i % 2).toDouble)).toDF("doc_id", "y")
+    val (model, written) = shuffleRecordsOf {
+      Classifier.trainLogistic(docs, labels, 4096, iters = 3, lr = 10.0)
+    }
+    info(s"shuffle records written during training: $written")
+    // the labeled docs hold 200 words; the whole corpus 48k. Posting
+    // the corpus shuffles at least one record per word
+    assert(written < nDocs * 20 / 10,
+      s"training shuffled $written records, over a tenth of the corpus's ${nDocs * 20} " +
+        "words: the posting table must hold the labeled docs only")
+    val alone = Classifier.trainLogistic(docs.join(labels.select("doc_id"), "doc_id"),
+      labels, 4096, iters = 3, lr = 10.0)
+    assert(model.weights.toSeq == alone.weights.toSeq, "weights differ from labeled-only training")
+    assert(model.bias == alone.bias && model.losses == alone.losses)
+    docs.unpersist()
   }
 
   test("HashedMargin expression == the posting-join formulation of the margin") {

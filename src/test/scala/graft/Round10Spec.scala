@@ -119,6 +119,16 @@ class Round10Spec extends SparkSpec {
     assert(!plan.contains("Window"), "agg variant must not plan a window")
   }
 
+  test("IVF assignMulti over k-means centroids plans no exchange") {
+    // the replaced crossJoin + rank-window shape exchanged n×k expanded
+    // rows per pass; the NearestBuckets projection must plan none
+    val vecs = hashVecs(2000)
+    val assigned = Similarity.assignMulti(vecs, Similarity.kmeans(vecs, 45, 2), probes = 2)
+    val plan = assigned.queryExecution.executedPlan.toString
+    assert(!plan.contains("Exchange"), s"assignment must stay a narrow projection, got:\n$plan")
+    assert(assigned.count() == 2000L * 2)
+  }
+
   test("d38 semantic decon equals the brute-force max-cosine formulation") {
     val corpus = emb
     val bench = emb.filter(col("vec_id") % 97 === 0)

@@ -220,6 +220,13 @@ class Round19Spec extends SparkSpec {
     r0.foreach(r => assert(r.getLong(1) == 0L && r.getDouble(2) == 0.0))
   }
 
+  test("d72: knnGraphOf's per-anchor top-k plans no Window; full 5-NN coverage") {
+    val kg = Similarity.knnGraphOf(hashVecs(2000))
+    val plan = kg.queryExecution.executedPlan.toString
+    assert(!plan.contains("Window"), s"per-anchor top-k must stay a bounded aggregate, got:\n$plan")
+    assert(kg.count() == 2000L * 5)
+  }
+
   test("d74: registered entry — panel size, bounds, determinism") {
     val a = graft.operators.Similarity.annRecall(spark, sf).collect()
     val b = graft.operators.Similarity.annRecall(spark, sf).collect()

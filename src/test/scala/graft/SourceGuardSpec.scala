@@ -4,13 +4,14 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Source guards over src/main: one session factory (graft.Harness),
-  * one checkpoint policy (graft.ops.Checkpoints), one sink replay guard
+/** Source guards over src/main: four mains (Amplify, Bench, Probe,
+  * Verify), one session factory (graft.Harness), one checkpoint policy
+  * (graft.ops.Checkpoints), one sink replay guard
   * (graft.sources.Sinks.unseen) and one layout marker
-  * (graft.ops.Artifacts). A second `SparkSession.builder`, an operator
-  * that picks its own reliable cut or checkpoint dir, a hand-rolled
-  * pruned guard or a hand-written `_layout` fails here, before it can
-  * drift. */
+  * (graft.ops.Artifacts). A fifth main, a second
+  * `SparkSession.builder`, an operator that picks its own reliable cut
+  * or checkpoint dir, a hand-rolled pruned guard or a hand-written
+  * `_layout` fails here, before it can drift. */
 class SourceGuardSpec extends AnyFunSuite {
 
   private val root = java.nio.file.Paths.get("src/main/scala")
@@ -27,6 +28,15 @@ class SourceGuardSpec extends AnyFunSuite {
     sources.collect { case (f, text) if !allowed(f, text) =>
       needles.filter(text.contains).map(n => s"$f: $n")
     }.flatten.sorted
+
+  test("the mains are frozen at Amplify, Bench, Probe and Verify") {
+    assert(sources.nonEmpty, "spec must run from the repo root")
+    val mains = sources.collect { case (f, text) if text.contains("def main(") => f }.sorted
+    assert(mains == Seq("graft/Amplify.scala", "graft/Bench.scala", "graft/Probe.scala",
+        "graft/Verify.scala"),
+      "measure a new shape with a graft.Probe subcommand, not a new main; mains now:\n" +
+        mains.mkString("\n"))
+  }
 
   test("SparkSession.builder appears only in graft.Harness") {
     assert(sources.nonEmpty, "spec must run from the repo root")

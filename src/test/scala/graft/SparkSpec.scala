@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, expr}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all suites (one JVM-wide session). */
@@ -22,6 +23,15 @@ trait SparkSpec extends AnyFunSuite {
     try body
     finally sc.setCheckpointDir(prev.map(p => new org.apache.hadoop.fs.Path(p).getParent.toString).orNull)
   }
+
+  /** `n` deterministic 64-dim (vec_id, embedding) rows: xxhash64-derived
+    * floats in [-1, 1), generated from `spark.range` (no scan, no
+    * exchange), for plan-shape guards that hold at any input size. */
+  def hashVecs(n: Long): DataFrame =
+    spark.range(n).select(col("id").as("vec_id"),
+      expr("""transform(sequence(0, 63),
+             |  i -> cast(pmod(xxhash64(id * 64 + i), 2000) / 1000.0 - 1.0 as float))""".stripMargin)
+        .as("embedding"))
 }
 
 object SparkSpec {
