@@ -75,8 +75,8 @@ object Bench {
     val unresolved = heavyFirst.filterNot(SparkEntry.queries.contains)
     require(unresolved.isEmpty, s"heavyFirst names not in SparkEntry.queries: $unresolved")
     // the session's one reliable-checkpoint dir: every
-    // graft.ops.Checkpoints.cut (surrogateIds, the token-budget mix,
-    // d36's eager cuts, the CC loops above the driver gate) writes
+    // graft.ops.Checkpoints.cut (two-level running sums, d36's eager
+    // cuts, the CC loops above the driver gate) writes
     // file-backed cuts here instead of accumulating MEMORY_AND_DISK
     // blocks across the suite
     graft.ops.Checkpoints.install(spark.sparkContext,

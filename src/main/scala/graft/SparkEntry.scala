@@ -222,7 +222,7 @@ object SparkEntry {
     "d29_ngram_topk"      -> (CorpusStats.ngramTopK _),
     // Zipf audit: top words + cumulative token coverage
     "d30_vocab_coverage"  -> (CorpusStats.vocabCoverage _),
-    // exact-greedy token-budget mixing (two-level prefix sum)
+    // exact-greedy token-budget mixing (sized prefix sum)
     "d31_token_budget_mix" -> (Curation.tokenBudgetMix _),
     // product-quantization ANN: M-byte codes + ADC + exact re-rank
     "d32_pq_ann"          -> (Similarity.pqTopK _),
@@ -325,7 +325,7 @@ object SparkEntry {
     // oracle-exact
     "d51_snapshot_diff"   -> (CorpusStats.snapshotDiff _),
     // CCNet perplexity buckets: head/middle/tail rank-thirds over the
-    // d44 NLL + deterministic 10% tail sample (two-level rank, no
+    // d44 NLL + deterministic 10% tail sample (surrogate-id rank, no
     // value-quantile knife edge); oracle-exact
     "d52_ccnet_buckets"   -> (Curation.ccnetBuckets _),
     // score docs against a FROZEN reference bigram LM (trained on the
@@ -4249,7 +4249,7 @@ object SparkEntry {
         |FROM pr p JOIN wout d ON d.src = p.node WHERE p.it = 8 ORDER BY p.node""".stripMargin,
 
     // d70: the d4 pair CTE + deterministic negatives. idx is a plain
-    // ROW_NUMBER over doc_id (the Spark side's two-level surrogate ids
+    // ROW_NUMBER over doc_id (the Spark side's surrogate ids
     // are window-identical by contract); candidates replay the
     // established md5-hex-parse uniform; the min-salt pick is the
     // MIN(STRUCT) argmin. pairs is MATERIALIZED (consumed by both

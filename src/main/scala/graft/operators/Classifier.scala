@@ -254,7 +254,7 @@ object Classifier {
   private[graft] val QcBuckets = 4096
 
   /** The registered d56 entry: CCNet end-to-end — teacher = d33
-    * unigram NLL, split at the MEDIAN by the deterministic two-level
+    * unigram NLL, split at the MEDIAN by the deterministic surrogate-id
     * rank (the d52 discipline — a mean cut measured 94% positive at
     * sf0.1 and the student degenerated to majority-class; rank gives
     * an exact balanced split, ties broken on doc_id), student = the

@@ -234,9 +234,10 @@ object Curation {
     *
     * Scale shape: the running sum is a per-source ordered prefix sum —
     * a naive window would sort each source inside ONE partition (5 TB a
-    * partition at 100 TB with 20 sources). Instead the two-level
-    * Silver.rangedRunningSum: identical cum values to the global
-    * window, skew bounded by the range partitioner. */
+    * partition at 100 TB with 20 sources). Silver.rangedRunningSum sizes
+    * it from the input: that window while the corpus fits one
+    * partition, else the two-level range scheme, skew bounded by the
+    * range partitioner. Identical cum values either way. */
   def tokenBudgetMix(s: SparkSession, d: String): DataFrame =
     tokenBudgetMixOf(Tables.documents(s, d).select("doc_id", "source", "text"))
 
@@ -245,9 +246,10 @@ object Curation {
     * to real BPE tokenizer tokens (graft.functions.Bpe) — same plan
     * shape, the n_tokens projection swaps one codegen'd expression for
     * another; budgets are set in the units LLM training budgets
-    * actually use. */
+    * actually use. `partitions` > 0 pins the running sum's slice count
+    * (see Silver.rangedRunningSum). */
   def tokenBudgetMixOf(docs: DataFrame, targetFrac: Double = 0.5,
-      partitions: Int = 32,
+      partitions: Int = 0,
       bpeVocab: Option[graft.functions.BpeVocab] = None): DataFrame = {
     val nTokens = bpeVocab match {
       case Some(v) => graft.functions.Bpe.tokenCount(col("text"), v)
@@ -555,9 +557,9 @@ object Curation {
     * percentile-interpolation knife edge — the q40 lesson) and ties
     * are impossible because doc_id joins the sort key.
     *
-    * Scale shape: d44's count shuffles/joins + the two-level
-    * surrogate-id rank (Silver.surrogateIds — no single-partition
-    * window), one broadcast total, hash-replayable tail sample.
+    * Scale shape: d44's count shuffles/joins + the surrogate-id rank
+    * (Silver.surrogateIds — two-level past one partition of input),
+    * one broadcast total, hash-replayable tail sample.
     */
   def ccnetBuckets(s: SparkSession, d: String): DataFrame =
     // slice the registered d44 frame's DirMemo cut — the ranking input
@@ -976,10 +978,10 @@ object Curation {
     *
     * Scale shape: positives are the d4/d19 pair set (bounded by
     * near-dup density, never corpus²); the negative lookup indexes
-    * docs by the two-level surrogate-id scheme (no single-partition
-    * window) and pays ONE corpus-scale co-shuffle of (idx → doc_id)
-    * against the 3·|pairs| candidate rows; validity checks are
-    * anti-joins against the pair set. Corpus count arrives as a
+    * docs by surrogate ids (Silver.surrogateIds — two-level past one
+    * partition of input) and pays ONE corpus-scale co-shuffle of
+    * (idx → doc_id) against the 3·|pairs| candidate rows; validity
+    * checks are anti-joins against the pair set. Corpus count arrives as a
     * broadcast one-row frame (no driver action).
     *
     * Oracle parity: candidate index = 1 + (first-8-hex-digits of

@@ -1,8 +1,9 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 
 import graft.Tables
 
@@ -92,52 +93,68 @@ object Silver {
   }
 
   /** Scalable deterministic surrogate ids: global dense-rank semantics
-    * over a DISTINCT-keyed frame WITHOUT a single-partition window —
-    * a [[rangedRunningSum]] of 1 in key order. The result equals
-    * `dense_rank() OVER (ORDER BY keys)` for distinct keys (boundary
-    * placement cancels out), so oracle parity is preserved, but no task
-    * ever holds more than its range slice: the id assignment survives a
-    * dim that ISN'T small (the single-partition dense_rank was the one
-    * silent scale assumption left in q54). The pinned range layout is
-    * cut by graft.ops.Checkpoints.cut. */
+    * over a DISTINCT-keyed frame — a [[rangedRunningSum]] of 1 in key
+    * order. The result equals `dense_rank() OVER (ORDER BY keys)` for
+    * distinct keys, so oracle parity is preserved; a dim that fits one
+    * partition gets that window itself, a larger one the two-level
+    * scheme, so no task ever holds more than its range slice.
+    * `partitions` > 0 pins the two-level slice count. */
   def surrogateIds(dim: DataFrame, keyCols: Seq[String], idCol: String,
-      partitions: Int = 32): DataFrame =
+      partitions: Int = 0): DataFrame =
     rangedRunningSum(dim, Nil, keyCols, lit(1L), idCol, partitions)
 
-  /** Two-level running sum: `outCol` = the running sum of `value` in
-    * `orderCols` order within each `groupCols` group, i.e. `sum(value)
-    * OVER (PARTITION BY groupCols ORDER BY orderCols ROWS UNBOUNDED
-    * PRECEDING)` for a unique ordering — without a window that sorts a
-    * whole group inside one task. Range-partition on groupCols ++
-    * orderCols (partition i holds strictly smaller keys than partition
-    * i+1), run the sum locally per (group, partition), then add each
-    * (group, partition)'s offset: a window over ≤ `partitions` tiny
-    * rows per group, broadcast back. Shared by [[surrogateIds]] (a
-    * running count over distinct keys) and Curation.tokenBudgetMixOf (a
-    * running token sum per source). */
+  /** `outCol` = the running sum of `value` in `orderCols` order within
+    * each `groupCols` group, i.e. `sum(value) OVER (PARTITION BY
+    * groupCols ORDER BY orderCols ROWS UNBOUNDED PRECEDING)` for a
+    * unique ordering. Shared by [[surrogateIds]] (a running count over
+    * distinct keys) and Curation.tokenBudgetMixOf (a running token sum
+    * per source).
+    *
+    * The slice count n is sized from the input the way AQE sizes a
+    * shuffle: Catalyst's size estimate (no job) over
+    * `spark.sql.adaptive.advisoryPartitionSizeInBytes`, capped at the
+    * session's shuffle partitions. At n = 1 the window above IS the
+    * scalable plan and runs as is: no range sample, cut, offset
+    * aggregate or broadcast. Above it (or with `partitions` > 0, which
+    * pins n), two levels, so no window sorts a whole group inside one
+    * task: range-partition on groupCols ++ orderCols (partition i holds
+    * strictly smaller keys than partition i+1), run the sum locally per
+    * (group, partition), then add each (group, partition)'s offset: a
+    * window over ≤ n tiny rows per group, broadcast back. An unknown
+    * estimate (LogicalRDD, streaming) reads as
+    * `spark.sql.defaultSizeInBytes` and so keeps the two-level path. */
   private[graft] def rangedRunningSum(df: DataFrame, groupCols: Seq[String],
       orderCols: Seq[String], value: org.apache.spark.sql.Column, outCol: String,
       partitions: Int): DataFrame = {
-    // Pin ONE sampled range layout (lazy, no driver barrier): both
-    // consumers below — the local sums and the per-partition offsets —
-    // must see the SAME partition boundaries, but RangePartitioner
-    // samples nondeterministically per execution, so relying on
-    // exchange reuse to unify them is fragile (AQE can defeat it).
-    val ranged = graft.ops.Checkpoints.cut(
-      df.repartitionByRange(partitions, (groupCols ++ orderCols).map(col): _*)
-        .withColumn("_pid", spark_partition_id()), eager = false)
-    val byPid = groupCols :+ "_pid"
-    val localW = Window.partitionBy(byPid.map(col): _*).orderBy(orderCols.map(col): _*)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val offs = ranged.groupBy(byPid.map(col): _*).agg(sum(value).as("_psum"))
-      .withColumn("_off", coalesce(sum(col("_psum")).over(
-        Window.partitionBy(groupCols.map(col): _*).orderBy("_pid")
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select((byPid :+ "_off").map(col): _*)
-    ranged.withColumn("_cum", sum(value).over(localW))
-      .join(broadcast(offs), byPid)
-      .withColumn(outCol, col("_off") + col("_cum"))
-      .drop("_pid", "_cum", "_off")
+    val conf = df.sparkSession.sessionState.conf
+    val n = if (partitions > 0) partitions else {
+      val advisory = conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
+      val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
+      ((est + advisory - 1) / advisory).min(conf.numShufflePartitions).max(1).toInt
+    }
+    def running(parts: Seq[String]): WindowSpec = Window.partitionBy(parts.map(col): _*)
+      .orderBy(orderCols.map(col): _*).rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    if (partitions <= 0 && n == 1) df.withColumn(outCol, sum(value).over(running(groupCols)))
+    else {
+      // Pin ONE sampled range layout (lazy, no driver barrier): both
+      // consumers below — the local sums and the per-partition offsets
+      // — must see the SAME partition boundaries, but RangePartitioner
+      // samples nondeterministically per execution, so relying on
+      // exchange reuse to unify them is fragile (AQE can defeat it).
+      val ranged = graft.ops.Checkpoints.cut(
+        df.repartitionByRange(n, (groupCols ++ orderCols).map(col): _*)
+          .withColumn("_pid", spark_partition_id()), eager = false)
+      val byPid = groupCols :+ "_pid"
+      val offs = ranged.groupBy(byPid.map(col): _*).agg(sum(value).as("_psum"))
+        .withColumn("_off", coalesce(sum(col("_psum")).over(
+          Window.partitionBy(groupCols.map(col): _*).orderBy("_pid")
+            .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
+        .select((byPid :+ "_off").map(col): _*)
+      ranged.withColumn("_cum", sum(value).over(running(byPid)))
+        .join(broadcast(offs), byPid)
+        .withColumn(outCol, col("_off") + col("_cum"))
+        .drop("_pid", "_cum", "_off")
+    }
   }
 
   // Per-(contract, minute) merge: best rank wins, MAX(mark) within it,
@@ -173,8 +190,9 @@ object Silver {
   def silverImportFrom(staged: DataFrame): DataFrame = {
     val parsed = parseStaged(staged)
 
-    // OPT master: distinct valid contracts with two-level surrogate ids
-    // (dense_rank semantics, no single-partition exchange).
+    // OPT master: distinct valid contracts with surrogate ids
+    // (dense_rank semantics; a day's few hundred contracts are one
+    // window, a dim past one partition the two-level scheme).
     val dim = surrogateIds(parsed
       .filter(col("strike") =!= 0.0 && col("cp").isNotNull && col("expiry").isNotNull)
       .select("strike", "cp", "expiry").distinct(),

@@ -75,7 +75,7 @@ object Sinks {
     * appends (parquet has no table-level PK to catch the race) —
     * serialize writers per historic table.
     */
-  /** @return the batch's event-time frontier (max `tsCol`, epoch ms)
+  /** @return the batch's event-time frontier (max offered `tsCol`, epoch ms)
     *   for the freshness gauge — computed in the SAME bounds pass the
     *   upsert already runs, so streaming sinks don't pay a second
     *   batch-source scan per commit; None for an empty/fully-null batch
@@ -88,15 +88,19 @@ object Sinks {
     // would land in the Hive default partition where the day-pruned
     // guard can never see it again — every re-delivery would duplicate
     // it, silently voiding the exactly-once contract.
-    val fresh0 = batch.filter(col(tsCol).isNotNull).dropDuplicates(keys)
+    val offered = batch.filter(col(tsCol).isNotNull)
     // Day bounds FIRST: an empty (or fully-filtered) batch must write
     // nothing in EITHER branch — a zero-row partitioned write on a
     // nonexistent path would create a schemaless directory that
-    // poisons every subsequent read.
-    val b = fresh0.agg(min(to_date(col(tsCol))).as("lo"),
+    // poisons every subsequent read. Taken over the offered rows, not
+    // the deduplicated ones: `keys` determine the day, so dropping
+    // duplicates cannot move the day range, and the bounds pass skips
+    // the dedup shuffle.
+    val b = offered.agg(min(to_date(col(tsCol))).as("lo"),
       max(to_date(col(tsCol))).as("hi"),
       max(col(tsCol).cast("timestamp")).as("frontier")).head()
     if (b.isNullAt(0)) return None // nothing to insert
+    val fresh0 = offered.dropDuplicates(keys)
     val hPath = new org.apache.hadoop.fs.Path(path)
     val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val fresh =

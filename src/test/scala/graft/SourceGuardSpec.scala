@@ -7,11 +7,12 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Source guards over src/main: four mains (Amplify, Bench, Probe,
   * Verify), one session factory (graft.Harness), one checkpoint policy
   * (graft.ops.Checkpoints), one sink replay guard
-  * (graft.sources.Sinks.unseen) and one layout marker
-  * (graft.ops.Artifacts). A fifth main, a second
+  * (graft.sources.Sinks.unseen), one layout marker
+  * (graft.ops.Artifacts) and one running-sum rule
+  * (graft.operators.Silver.rangedRunningSum). A fifth main, a second
   * `SparkSession.builder`, an operator that picks its own reliable cut
-  * or checkpoint dir, a hand-rolled pruned guard or a hand-written
-  * `_layout` fails here, before it can drift. */
+  * or checkpoint dir, a hand-rolled pruned guard, a hand-written
+  * `_layout` or a second range layout fails here, before it can drift. */
 class SourceGuardSpec extends AnyFunSuite {
 
   private val root = java.nio.file.Paths.get("src/main/scala")
@@ -61,5 +62,18 @@ class SourceGuardSpec extends AnyFunSuite {
     val marker = offenders(Seq("/_layout\""))((f, _) => f == "graft/ops/Artifacts.scala")
     assert(marker.isEmpty,
       "read and write _layout markers through graft.ops.Artifacts:\n" + marker.mkString("\n"))
+  }
+
+  test("one running-sum rule: repartitionByRange only in Silver.rangedRunningSum and " +
+      "the z-order writer, no fixed 32-slice default") {
+    val ranged = Seq("graft/operators/Silver.scala", "graft/sources/Sinks.scala")
+    val bad = offenders(Seq("repartitionByRange("))((f, _) => ranged.contains(f))
+    val uses = ranged.map(f => f -> sources.find(_._1 == f).fold(0)(
+      _._2.split("repartitionByRange\\(", -1).length - 1))
+    assert(bad.isEmpty && uses.forall(_._2 == 1),
+      "size running sums with graft.operators.Silver.rangedRunningSum:\n" +
+        (bad ++ uses.collect { case (f, n) if n != 1 => s"$f: $n uses" }).mkString("\n"))
+    val fixed = offenders(Seq("partitions: Int = 32"))((_, _) => false)
+    assert(fixed.isEmpty, "size slices from the input, not a fixed default:\n" + fixed.mkString("\n"))
   }
 }
