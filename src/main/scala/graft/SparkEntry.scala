@@ -145,15 +145,15 @@ object SparkEntry {
     // transitive closure (graph ops ARE SQL-expressible for bounded
     // closures, so the driver verifies the component labels themselves)
     // size-gated CC (driver union-find at this edge count; the
-    // distributed bounded loop above the gate) — labels are identical
-    // either way, and Round7Spec keeps the bounded loop itself
+    // distributed propagateLabels loop above the gate) — labels are
+    // identical either way, and Round7Spec keeps the loop itself
     // oracle-parity-gated on this exact pair list so the distributed
     // path stays verified without billing its ~3× scheduling overhead
     // to every bench capture
     "d20_dup_clusters"    -> ((s, d) =>
-      Dedup.connectedComponentsAuto(Dedup.ngramJaccard(s, d).select("id_a", "id_b"))
+      Dedup.connectedComponents(Dedup.ngramJaccard(s, d).select("id_a", "id_b"))
         .orderBy("node")),
-    // the composed 100 TB dedup path: LSH pairs → bounded CC → keep-min
+    // the composed 100 TB dedup path: LSH pairs → CC → keep-min
     // corpus. Oracle-exact since r15 (LSH capture is deterministic —
     // pair CTE + recursive closure); Round4Spec still gates the
     // probabilistic part (drop-set ⊆ exact pipeline's, high recall)
@@ -458,7 +458,7 @@ object SparkEntry {
     "d72_knn_graph" -> (Similarity.knnGraph _),
     // mutual-kNN graph + component labels (clustering/curriculum
     // hand-off): keep (a,b) iff each is in the other's top-k and
-    // cos >= 0.3, label with connectedComponentsAuto; oracle = the
+    // cos >= 0.3, label with connectedComponents; oracle = the
     // d72 knn CTE self-joined on the swapped key + reach-closure
     "d73_mutual_knn" -> (Similarity.mutualKnn _),
     // ANN recall gauge: exact brute-force top-5 for a 100-query panel

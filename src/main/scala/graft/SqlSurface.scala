@@ -319,12 +319,11 @@ object SqlSurface {
     "heavy_tokens" -> (docs => TF.heavyTokensOf(docs.select("lang", "text"))),
     "minhash_pairs" -> (docs => Dedup.minhashLshOf(docs.select("doc_id", "text"))),
     "simhash_pairs" -> (docs => Dedup.simhashOf(docs.select("doc_id", "text"))),
-    // duplicate clusters over the exact d4 pair list (d20). The CC is
-    // size-gated: under the gate the component labels come from a
-    // driver union-find, which runs when the TVF ANALYZES — a SQL user
-    // pays the mining cost at statement analysis, like a stored
-    // procedure would.
-    "dup_clusters" -> (docs => Dedup.connectedComponentsAuto(
+    // duplicate clusters over the exact d4 pair list (d20).
+    // Dedup.connectedComponents counts (and, under its edge gate,
+    // labels) when the TVF ANALYZES — a SQL user pays the mining cost
+    // at statement analysis, like a stored procedure would.
+    "dup_clusters" -> (docs => Dedup.connectedComponents(
       Dedup.ngramJaccardOf(docs).select("id_a", "id_b")).orderBy("node")))
 
   // ---- batch 3: sampling / packing / bucketing -----------------------

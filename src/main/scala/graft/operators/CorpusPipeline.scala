@@ -115,15 +115,11 @@ object CorpusPipeline {
           .filter(size(col("ws")) >= 3)
         Dedup.minhashLshPairs(words)
       }
-    // size-gated CC (connectedComponentsAuto): the edge count of a
-    // BLOCKED near-dup mine is true-pair-bound, so most corpora land
-    // under the driver union-find gate — measured 3× cheaper than 8
-    // scheduled label-propagation rounds on tiny graphs, and its two
-    // driver actions (count + collect) don't serialize the concurrent
-    // bench now that per-query FAIR pools exist. Above the gate the
-    // barrier-free bounded loop runs as before (per-round lazy cuts,
-    // one convergence count).
-    val cc = Dedup.connectedComponentsAuto(pairs.select("id_a", "id_b"))
+    // the edge count of a BLOCKED near-dup mine is true-pair-bound, so
+    // most corpora land under Dedup.connectedComponents' driver
+    // union-find gate; its two driver actions (count + collect) don't
+    // serialize the concurrent bench now that per-query FAIR pools exist
+    val cc = Dedup.connectedComponents(pairs.select("id_a", "id_b"))
     val drop = cc.filter(col("node") =!= col("cluster_id"))
       .select(col("node").as("doc_id"))
     // un-observed twin for the side branches that re-read a stage's

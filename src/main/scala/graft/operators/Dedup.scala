@@ -333,203 +333,28 @@ object Dedup {
   def hamming(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
 
   /** Duplicate-cluster formation: connected components over a pair list
-    * (id_a, id_b) by iterative min-label propagation — each node adopts
-    * the smallest label among itself and its neighbors until fixpoint.
-    * This is how near-dup PAIRS (MinHash/SimHash output) become dedup
-    * GROUPS (keep one doc per component) in a training-data pipeline.
+    * (id_a, id_b) — node → the smallest id of its component, one row per
+    * node that occurs in a pair. This is how near-dup PAIRS
+    * (MinHash/SimHash/jaccard output) become dedup GROUPS (keep one doc
+    * per component) in a training-data pipeline.
     *
-    * Scale shape: each iteration is one shuffle on node id (join +
-    * min-agg); iterations ≈ graph diameter (near-dup clusters are
-    * shallow, so 3-6 rounds). Label frontier is cut every round by
-    * graft.ops.Checkpoints.cut (reliable under an installed checkpoint
-    * dir) — the standard large-graph loop on Spark without GraphX's
-    * partition-pinning machinery.
+    * One lazy cut of the pairs and one count pick the path:
+    *  - at most [[MaxDriverEdges]] edges with Long ids: one collect and
+    *    an exact driver union-find. Near-dup pair graphs are bounded by
+    *    true near-dup density, so they are usually tiny even when the
+    *    corpus is not, and 8 scheduled label-propagation rounds on a
+    *    thousand-edge graph cost ~3× the whole pipeline at bench scale.
+    *  - above the gate, or for non-Long ids, the distributed
+    *    [[propagateLabels]] loop.
+    * Same labels either way. An empty pair list gives an empty frame
+    * whose id types follow the pairs'.
+    *
+    * Driver-side memory at the gate: 2M collected edges is ~32 MB of raw
+    * longs but several hundred MB of JVM objects (Row boxing, the
+    * LongMap) — sized for a multi-GB driver heap, as Spark drivers
+    * running 100 TB jobs have.
     */
-  /** @param maxIter safety valve only — the loop exits on convergence
-    *   (labels are monotone decreasing, so it always converges). The
-    *   default accommodates diameter-100 graphs; a cap SMALLER than the
-    *   component diameter returns partial labels silently, so don't
-    *   lower it to "tune" runtime (use [[connectedComponentsBounded]]
-    *   for barrier-free scheduling instead). */
-  def connectedComponents(pairs: DataFrame, maxIter: Int = 100): DataFrame = {
-    val edges = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
-      .union(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
-      .distinct()
-      .cache()
-    var labels = edges.select(col("src").as("node")).distinct()
-      .withColumn("label", col("node"))
-      .cache()
-    var changed = 1L
-    var iter = 0
-    while (changed > 0 && iter < maxIter) {
-      val neighborLabels = edges
-        .join(labels.withColumnRenamed("node", "dst_n"), col("dst") === col("dst_n"))
-        .select(col("src").as("node"), col("label"))
-      // carry the previous label through the min-agg so convergence is
-      // decided on the SAME materialized frame — one count over the
-      // checkpointed result, no extra join-and-compare job
-      val idType = pairs.schema("id_a").dataType
-      val next = graft.ops.Checkpoints.cut(
-        labels.select(col("node"), col("label"), col("label").as("old"))
-          .union(neighborLabels.withColumn("old", lit(null).cast(idType)))
-          .groupBy("node")
-          .agg(min("label").as("label"), max("old").as("old")), eager = true)
-      changed = next.filter(col("label") =!= col("old")).count()
-      labels.unpersist() // frees the INIT cache in round 1; no-op after
-      // no re-cache: `next` is already eagerly checkpoint-materialized,
-      // so round N+1's two references read that RDD directly — a cache
-      // on top was a redundant second copy that leaked on return (the
-      // same defect the advisor caught on the bounded variant)
-      labels = next.select("node", "label")
-      iter += 1
-    }
-    edges.unpersist()
-    labels.withColumnRenamed("label", "cluster_id")
-  }
-
-  /** Lazy bounded-iteration connected components: builds `iters`
-    * rounds of min-label propagation as ONE deferred plan — no per-round
-    * checkpoint/count barriers — then verifies the fixpoint with a
-    * single count, falling back to the eager [[connectedComponents]]
-    * loop from the reached frontier in the (rare) case a component's
-    * diameter exceeds `iters`. Same answer as the eager loop on every
-    * input; far friendlier to concurrent schedulers: the whole
-    * propagation is one job instead of ~2·rounds sequential barriers
-    * (the eager entry serialized the whole benchmark suite behind its
-    * tiny blocking jobs).
-    *
-    * Near-dup clusters are low-diameter (similarity is near-transitive
-    * at high thresholds), so `iters` = 8 converges in one shot in
-    * practice; the fallback keeps worst-case correctness.
-    *
-    * @param broadcastMaxEdges size gate for the per-round label
-    *   broadcast: the label frame has one row per node of the pair
-    *   graph (≤ the edge count, which we know exactly from the single
-    *   up-front materializing count). Below the gate, broadcasting the
-    *   labels beats a two-sided shuffle join; ABOVE it (a 100 TB corpus
-    *   whose near-dup graph has hundreds of millions of nodes) a forced
-    *   broadcast is an OOM multiplied by `iters`, so each round falls
-    *   back to a plain shuffle join on the label id — the same decision
-    *   AQE would make, but made once up front because the loop builds
-    *   one deferred plan. Default 2M edges ≈ tens of MB of label rows.
-    * @param roundPartitions explicit per-round shuffle width. None (the
-    *   default) lets the groupBy shuffle at spark.sql.shuffle.partitions
-    *   with normal map-side partial aggregation — the scale-safe choice.
-    *   A small Some(n) packs each round into n tasks, a single-node
-    *   bench tuning for graphs where per-task scheduling overhead, not
-    *   data, dominates.
-    *
-    * The per-round lineage cuts are lazy graft.ops.Checkpoints.cut
-    * calls: under an installed checkpoint dir they are RELIABLE —
-    * still barrier-free (materialized by the single convergence
-    * count), but an executor loss replays from the checkpoint files
-    * instead of killing the job (localCheckpoint blocks die with
-    * their executor).
-    */
-  def connectedComponentsBounded(pairs: DataFrame, iters: Int = 8,
-      broadcastMaxEdges: Long = 2000000L,
-      roundPartitions: Option[Int] = None): DataFrame = {
-    val sc = pairs.sparkSession.sparkContext
-    val reliable = graft.ops.Checkpoints.reliable(sc)
-    // edges feed every round's join AND the label init — without a
-    // lineage cut the upstream pair-mining query would re-execute
-    // once per round
-    val edges = graft.ops.Checkpoints.cut(
-      pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
-        .union(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
-        .distinct(), eager = false)
-    // ONE materializing count before the loop: pins the edge RDD (the
-    // upstream pair-mining query runs exactly once) and supplies the
-    // statistic the broadcast-vs-shuffle gate needs. nodes ≤ edges, so
-    // the edge count is a safe upper bound on the label frame.
-    val edgeCount = edges.count()
-    val useBroadcast = edgeCount <= broadcastMaxEdges
-    var labels = edges.select(col("src").as("node")).distinct()
-      .withColumn("label", col("node"))
-    val idType = pairs.schema("id_a").dataType
-    for (_ <- 1 to iters) {
-      val labelSide = labels.withColumnRenamed("node", "dst_n")
-      val neighborLabels = edges
-        .join(if (useBroadcast) broadcast(labelSide) else labelSide,
-          col("dst") === col("dst_n"))
-        .select(col("src").as("node"), col("label"))
-      val unioned = labels.select(col("node"), col("label"), col("label").as("old"))
-        .union(neighborLabels.withColumn("old", lit(null).cast(idType)))
-      labels = roundPartitions.map(n => unioned.repartition(n, col("node")))
-        .getOrElse(unioned)
-        .groupBy("node")
-        .agg(min("label").as("label"), max("old").as("old"))
-      // NON-EAGER lineage cut: `labels` is referenced twice per round
-      // (self + neighbor branch), so an un-cut plan doubles per
-      // iteration — 2^iters subtree executions. A lazy checkpoint
-      // truncates lineage and shares one materialized RDD per round
-      // WITHOUT the per-round driver count barrier the eager loop pays.
-      labels = graft.ops.Checkpoints.cut(labels, eager = false)
-    }
-    val last = labels.cache()
-    // The convergence count is the ONE action that materializes the
-    // whole deferred chain. With reliable cuts, Spark by
-    // default commits only the TOPMOST checkpoint-marked RDD of a job
-    // (spark.checkpoint.checkpointAllMarkedAncestors=false, read as a
-    // thread-LOCAL property) — every inner round's "reliable cut"
-    // would stay uncommitted and an executor loss would still replay
-    // the full lineage. Flip the property around this action so each
-    // round's marked RDD actually lands on checkpoint storage.
-    val ckptProp = "spark.checkpoint.checkpointAllMarkedAncestors"
-    val prevProp = sc.getLocalProperty(ckptProp)
-    if (reliable) sc.setLocalProperty(ckptProp, "true")
-    val changed =
-      try last.filter(col("label") =!= col("old")).count()
-      finally if (reliable) sc.setLocalProperty(ckptProp, prevProp)
-    val out =
-      if (changed == 0) {
-        // Materialize off the cache, then release it — returning an
-        // alias of the cached plan would leak one cached label RDD per
-        // invocation in a long-lived session (bench/test JVMs). With
-        // reliable cuts the final round is ALREADY committed to
-        // reliable storage by the count above — re-checkpointing it
-        // would just write the identical label set a second time.
-        val res0 = last.select("node", "label")
-        val res = if (reliable) res0
-                  else res0.localCheckpoint(eager = true)
-        last.unpersist()
-        res
-      } else {
-        // Frontier not converged: finish with the eager loop over the
-        // ORIGINAL pairs plus (node, label) shortcut edges. The original
-        // edges are required for correctness — label edges alone can
-        // split a component (two distant local minima never see each
-        // other); the shortcuts only accelerate convergence.
-        val rest = connectedComponents(pairs.select("id_a", "id_b").union(
-          last.select(col("node").as("id_a"), col("label").as("id_b"))),
-          maxIter = 1000)
-        last.unpersist()
-        rest.select(col("node"), col("cluster_id").as("label"))
-      }
-    out.withColumnRenamed("label", "cluster_id")
-  }
-
-  /** Size-gated connected components: EXACT driver union-find below
-    * `maxDriverEdges` (one collect; near-dup pair graphs are bounded by
-    * true near-dup density, so they are usually tiny even when the
-    * corpus is not), the barrier-free distributed loop above it. Same
-    * labels either way — node → component-minimum id, every node
-    * emitted. The gate exists because 8 rounds of distributed label
-    * propagation on a thousand-edge graph is pure scheduling overhead
-    * (measured ~3× the whole pipeline's cost at bench scale), while a
-    * 100 TB corpus whose pair graph outgrows the driver still gets the
-    * scale-safe path.
-    *
-    * Driver-side memory at the gate: 2M collected edges is ~32 MB of
-    * raw longs but several hundred MB of JVM objects (Row boxing, the
-    * LongMap/bitset-free node set) — the default assumes a multi-GB
-    * driver heap, as Spark drivers running 100 TB jobs have; size
-    * `maxDriverEdges` DOWN on small drivers. The driver path also
-    * requires LongType ids (the common doc_id case); other id types
-    * take the type-generic distributed loop regardless of size.
-    */
-  def connectedComponentsAuto(pairs: DataFrame,
-      maxDriverEdges: Long = 2000000L): DataFrame = {
+  def connectedComponents(pairs: DataFrame): DataFrame = {
     val s = pairs.sparkSession
     // lazy cut + count in ONE action: an eager localCheckpoint runs its
     // own internal count() and discards the number, so eager-then-count
@@ -539,15 +364,16 @@ object Dedup {
     val n = cut.count()
     if (n == 0) {
       cut.unpersist()
+      val t = undirected(cut).schema("src").dataType
       return s.emptyDataFrame
-        .select(lit(0L).as("node"), lit(0L).as("cluster_id")).limit(0)
+        .select(lit(0).cast(t).as("node"), lit(0).cast(t).as("cluster_id"))
     }
     val longIds = cut.schema.fields.forall(
       _.dataType == org.apache.spark.sql.types.LongType)
-    if (n > maxDriverEdges || !longIds) {
-      // bounded CC materializes its own lineage cuts; release ours
-      // once it returns or the block leaks per invocation
-      val res = connectedComponentsBounded(cut)
+    if (n > MaxDriverEdges || !longIds) {
+      // the loop materializes its own lineage cuts; release ours once
+      // it returns or the block leaks per invocation
+      val res = propagateLabels(cut)
       cut.unpersist()
       return res
     }
@@ -573,6 +399,72 @@ object Dedup {
     parent.keys.toSeq.map(x => (x, find(x))).toDF("node", "cluster_id")
   }
 
+  /** Edge count up to which [[connectedComponents]] labels on the driver. */
+  private val MaxDriverEdges = 2000000L
+
+  /** Both orientations of every pair, as (src, dst). */
+  private def undirected(pairs: DataFrame): DataFrame =
+    pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
+      .union(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
+
+  /** Distributed connected components by min-label propagation: each
+    * node adopts the smallest label among itself and its neighbors until
+    * fixpoint. Rounds run in batches of 8: each round's label frame is a
+    * lazy graft.ops.Checkpoints.cut (the frame is read twice per round,
+    * so an un-cut plan would double per round), and a batch ends with
+    * one convergence count instead of a count per round. A batch whose
+    * last round changed no label is the fixpoint; otherwise the next
+    * batch continues from the reached labels over the original edges.
+    * Near-dup clusters are low-diameter, so one batch is the norm; a
+    * long chain takes ceil(diameter / 8) batches. No broadcast is forced
+    * on the label join: above the driver gate the label frame can
+    * outgrow one.
+    *
+    * Under an installed checkpoint dir the cuts are RELIABLE: still
+    * materialized by the batch's single count, but an executor loss
+    * replays from the checkpoint files instead of killing the job.
+    */
+  private[graft] def propagateLabels(pairs: DataFrame): DataFrame = {
+    val sc = pairs.sparkSession.sparkContext
+    // With reliable cuts, a job commits only its TOPMOST
+    // checkpoint-marked RDD unless that RDD was CREATED under
+    // spark.checkpoint.checkpointAllMarkedAncestors=true (a thread-local
+    // property each RDD reads once, at construction). Set it while the
+    // loop builds its cuts, so each batch's count commits the edges and
+    // every round, not only the last one.
+    val ckptProp = "spark.checkpoint.checkpointAllMarkedAncestors"
+    val prevProp = sc.getLocalProperty(ckptProp)
+    val reliable = graft.ops.Checkpoints.reliable(sc)
+    if (reliable) sc.setLocalProperty(ckptProp, "true")
+    try {
+      // edges feed every round's join AND the label init — without a
+      // lineage cut the upstream pair-mining query would re-execute
+      // once per round
+      val edges = graft.ops.Checkpoints.cut(undirected(pairs).distinct(), eager = false)
+      val idType = edges.schema("src").dataType
+      var labels = edges.select(col("src").as("node")).distinct()
+        .withColumn("label", col("node"))
+      var changed = 1L
+      while (changed > 0) {
+        for (_ <- 1 to 8) {
+          val neighborLabels = edges
+            .join(labels.withColumnRenamed("node", "dst_n"), col("dst") === col("dst_n"))
+            .select(col("src").as("node"), col("label"))
+          // carry the previous label through the min-agg so convergence
+          // is decided on the batch's last frame with one count
+          labels = graft.ops.Checkpoints.cut(
+            labels.select(col("node"), col("label"), col("label").as("old"))
+              .union(neighborLabels.withColumn("old", lit(null).cast(idType)))
+              .groupBy("node")
+              .agg(min("label").as("label"), max("old").as("old")), eager = false)
+        }
+        changed = labels.filter(col("label") =!= col("old")).count()
+        labels = labels.select("node", "label")
+      }
+      labels.withColumnRenamed("label", "cluster_id")
+    } finally if (reliable) sc.setLocalProperty(ckptProp, prevProp)
+  }
+
   /** d65: PageRank centrality over the exact near-dup pair graph —
     * link-analysis importance for dedup keep-policies and corpus
     * weighting (which copy of a duplicate family is the "canonical"
@@ -591,44 +483,16 @@ object Dedup {
     * 2^63). The emitted double is the exact unit long × 1e-9 — one
     * rounding, same op both dialects.
     *
-    * Scale shape: the degree-annotated edge frame is built once and
-    * lazily localCheckpointed (an un-cut loop would re-run the pair
-    * miner every round); each round is ONE shuffle (edges ⋈ ranks on
-    * src, groupBy dst) with a lazy per-round cut — barrier-free like
-    * connectedComponentsBounded (node count arrives as a broadcast
-    * one-row frame, not a driver action), so the whole 8-round DAG
-    * executes as one job at the consuming action. */
+    * Computed as the unit-weight case of [[pageRankWeightedOf]]:
+    * with w = 1 on every edge, W_u = deg_u and (r·1) DIV W_u is
+    * r DIV deg_u, so the weighted loop's ranks are exactly these. */
   def pageRank(s: SparkSession, d: String): DataFrame =
     pageRankOf(ngramJaccard(s, d).select("id_a", "id_b"))
 
   /** Core of [[pageRank]] over an explicit (id_a, id_b) pair frame. */
-  def pageRankOf(pairs: DataFrame, iters: Int = 8): DataFrame = {
-    val edges = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
-      .union(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
-      .localCheckpoint(eager = false)
-    val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
-      .localCheckpoint(eager = false)
-    val edgesDeg = edges.join(deg, "src").localCheckpoint(eager = false)
-    val nn = broadcast(deg.agg(count(lit(1)).as("n")))
-    var ranks = deg.crossJoin(nn)
-      .select(col("src").as("node"), expr("1000000000L DIV n").as("r"))
-      .localCheckpoint(eager = false)
-    for (_ <- 1 to iters) {
-      ranks = edgesDeg
-        .join(ranks, col("src") === col("node"))
-        .select(col("dst"), expr("r DIV deg").as("c"))
-        .groupBy("dst").agg(sum(col("c")).as("sc"))
-        .crossJoin(nn)
-        .select(col("dst").as("node"),
-          expr("150000000L DIV n + (85L * sc) DIV 100L").as("r"))
-        .localCheckpoint(eager = false)
-    }
-    ranks.join(deg, col("node") === col("src"))
-      .select(col("node"), col("deg"),
-        col("r").as("r_units"),
-        (col("r").cast("double") * lit(1e-9)).as("pagerank"))
-      .orderBy("node")
-  }
+  def pageRankOf(pairs: DataFrame, iters: Int = 8): DataFrame =
+    pageRankWeightedOf(pairs.select(col("id_a"), col("id_b"), lit(1L).as("w_units")), iters)
+      .select("node", "deg", "r_units", "pagerank")
 
   /** d69: WEIGHTED PageRank over the exact near-dup pair graph — the
     * canonical-copy keep-policy signal [[pageRank]]'s scaladoc
@@ -648,9 +512,15 @@ object Dedup {
     * Convergence readout: each output row carries
     * delta_units = |r_iters − r_{iters−1}| — the per-node L1 step of
     * the final round. One agg over the result gives the global
-    * convergence gauge without any in-loop driver action (the
-    * connectedComponentsBounded discipline: the loop itself stays
-    * barrier-free). */
+    * convergence gauge without any in-loop driver action: the loop
+    * itself stays barrier-free.
+    *
+    * Scale shape: the weight-annotated edge frame is built once and
+    * lazily localCheckpointed (an un-cut loop would re-run the pair
+    * miner every round); each round is ONE shuffle (edges ⋈ ranks on
+    * src, groupBy dst) with a lazy per-round cut, and the node count
+    * arrives as a broadcast one-row frame, so the loop runs no driver
+    * action of its own. */
   def pageRankWeighted(s: SparkSession, d: String): DataFrame = {
     // exact per-doc distinct-token sizes, same tokenization as the d4
     // miner (split of lower(text) ≡ lower of split tokens for " ")
@@ -817,9 +687,7 @@ object Dedup {
     * ships.
     */
   def dedupedCorpus(docs: DataFrame, pairs: DataFrame): DataFrame = {
-    // size-gated CC: exact driver union-find for density-bounded pair
-    // graphs, the barrier-free bounded loop when they outgrow it
-    val cc = connectedComponentsAuto(pairs.select("id_a", "id_b"))
+    val cc = connectedComponents(pairs.select("id_a", "id_b"))
     val drop = cc.filter(col("node") =!= col("cluster_id"))
       .select(col("node").as("doc_id"))
     docs.join(drop, Seq("doc_id"), "left_anti")
@@ -1184,8 +1052,8 @@ object Dedup {
     * 100 TB training corpus takes, as ONE gated entry:
     * LSH candidate pairs verified with the exact word-set jaccard
     * ([[ngramJaccardViaLsh]], pair count bounded by true near-dup
-    * density, never O(n²)) → duplicate clusters via barrier-free
-    * bounded min-label propagation ([[connectedComponentsBounded]]) →
+    * density, never O(n²)) → duplicate clusters via
+    * [[connectedComponents]] →
     * keep the smallest doc_id per cluster ([[dedupedCorpus]]).
     * Reference analog: the staging → anti-join-vs-historic → insert
     * dedup loop (/root/reference/sql/opt.sql:347-391) run as one batch.

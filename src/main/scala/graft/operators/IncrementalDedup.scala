@@ -324,20 +324,9 @@ object IncrementalDedup {
     *   index-side pass dominates the cycle. Like `buckets`, the choice
     *   is per-root and permanent — enforced via `_layout` (a silent
     *   flip would reinterpret the bucket dirs and miss collisions).
-    * @param driverMaxEdges size gate for the per-batch component
-    *   labeling. A micro-batch's verified edge set is bounded by the
-    *   BATCH near-dup density, not corpus size, so it is usually tiny —
-    *   and an 8-round distributed label propagation on a tiny graph is
-    *   pure scheduling overhead (measured: it tripled the per-batch
-    *   cost). At or below the gate the exact labels come from one
-    *   collect + driver union-find (same keep-min semantics); above it
-    *   — a giant batch or a pathologically dense one — the barrier-free
-    *   distributed loop takes over. See connectedComponentsAuto's notes
-    *   on driver-heap sizing at the gate.
     */
   def upsertBatch(batch: DataFrame, root: String, threshold: Double = 0.8,
       blockCols: Seq[String] = Seq("lang", "source"), buckets: Int = 64,
-      driverMaxEdges: Long = 2000000L,
       bucketedIndex: Boolean = false): Unit = {
     val s = batch.sparkSession
     heal(s, root) // finish any interrupted compaction first (writer-side only)
@@ -446,15 +435,13 @@ object IncrementalDedup {
     toRelease += edgesHist
 
     // ---- incremental CC: batch pairs + star edges ------------------
-    // size-gated: driver union-find for micro-batch-sized edge sets
-    // (the overwhelmingly common case), distributed bounded CC above
-    // the gate — shared with the batch pipeline (dedupedCorpus).
-    // No checkpoint of the union here: connectedComponentsAuto cuts its
-    // input itself (the old eager allEdges cut materialized the same
-    // union one job earlier, then CC re-persisted it — pure overhead)
+    // Dedup.connectedComponents, shared with the batch pipeline
+    // (dedupedCorpus): a micro-batch's verified edge set is bounded by
+    // the BATCH near-dup density, not corpus size, so it usually takes
+    // the driver union-find. No checkpoint of the union here: the CC
+    // cuts its input itself
     val allEdges = edgesNew.union(edgesHist)
-    val labels = Dedup.connectedComponentsAuto(allEdges,
-      maxDriverEdges = driverMaxEdges)
+    val labels = Dedup.connectedComponents(allEdges)
     toRelease += labels
 
     // historic cluster labels whose component found a smaller minimum:

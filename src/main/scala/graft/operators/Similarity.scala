@@ -1067,7 +1067,7 @@ object Similarity {
       .filter(col("id_a") < col("id_b"))
       .filter(dot(col("v_a"), col("v_b")) / (col("n_a") * col("n_b")) >= lit(threshold))
       .select("id_a", "id_b").distinct()
-    val comps = Dedup.connectedComponentsAuto(pairs)
+    val comps = Dedup.connectedComponents(pairs)
     val members = withCos.select("vec_id", "cent_cos")
       .join(comps, col("vec_id") === col("node"))
       .select(col("vec_id"), col("cent_cos"), col("cluster_id"))
@@ -1340,9 +1340,9 @@ object Similarity {
     *
     * Scale shape: input is the d72 table (n·k rows, n^1.5 build), the
     * mutual check is ONE equi-self-join on (id_a, id_b) — no new pair
-    * volume — and components go through connectedComponentsAuto
-    * (driver union-find below the edge gate, barrier-free bounded
-    * label propagation above it). The minCos prune bounds component
+    * volume — and components go through Dedup.connectedComponents
+    * (driver union-find below the edge gate, distributed label
+    * propagation above it). The minCos prune bounds component
     * size by true similarity density, so the closure never inherits a
     * giant weak-link component.
     *
@@ -1370,7 +1370,7 @@ object Similarity {
     val mutual = fwd.join(rev, Seq("id_a", "id_b"), "left_semi")
       .localCheckpoint(eager = false)
     val labels = graft.operators.Dedup
-      .connectedComponentsAuto(mutual.select("id_a", "id_b"))
+      .connectedComponents(mutual.select("id_a", "id_b"))
     mutual
       .join(labels.select(col("node").as("id_a"), col("cluster_id")), "id_a")
       .select(col("id_a"), col("id_b"), col("cos"), col("cluster_id"))

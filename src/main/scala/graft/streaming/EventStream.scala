@@ -406,87 +406,6 @@ object EventStream {
         })
   }
 
-  /** Gap-based sessionization on the `transformWithState` API with
-    * EVENT-TIME TIMERS — the third leg of the modern stateful surface
-    * (value/list state: [[FunnelProcessor]]; TTL: [[LatestProcessor]];
-    * timers: here). Same semantics as [[sessionize]]: a 30-minute
-    * event-time gap closes a session, either on the next in-gap event
-    * or when the watermark passes session_end + gap (the registered
-    * timer fires — no session is parked forever). One timer per key is
-    * live at a time: re-registration deletes the previous one, and a
-    * fired timer is ignored as stale if the session has since been
-    * extended past it. Event-time timers fire on watermark advance
-    * only, so bounded runs settle (the safe mode, per the
-    * ProcessingTime caveat on [[latestPerKeyTtl]]).
-    */
-  class SessionProcessor(gapMinutes: Int)
-      extends org.apache.spark.sql.streaming.StatefulProcessor[Long, Tick, SessionOut] {
-    private val gapUs = gapMinutes * 60L * 1000000L
-    private val gapMs = gapMinutes * 60L * 1000L
-    @transient private var sess: org.apache.spark.sql.streaming.ValueState[SessState] = _
-    @transient private var timer: org.apache.spark.sql.streaming.ValueState[Long] = _
-    override def init(outputMode: OutputMode,
-        timeMode: org.apache.spark.sql.streaming.TimeMode): Unit = {
-      val none = org.apache.spark.sql.streaming.TTLConfig.NONE
-      sess = getHandle.getValueState[SessState]("session",
-        org.apache.spark.sql.Encoders.product[SessState], none)
-      timer = getHandle.getValueState[Long]("timer_at",
-        org.apache.spark.sql.Encoders.scalaLong, none)
-    }
-    private def emit(user: Long, ss: SessState) =
-      SessionOut(user, usToTs(ss.start), usToTs(ss.end), ss.n, closed = true)
-    override def handleInputRows(user: Long, ticks: Iterator[Tick],
-        tv: org.apache.spark.sql.streaming.TimerValues): Iterator[SessionOut] = {
-      val sorted = ticks.toSeq.sortBy(t => (tsToUs(t.ts), t.event_id))
-      val out = scala.collection.mutable.ArrayBuffer.empty[SessionOut]
-      var cur = if (sess.exists()) Option(sess.get()) else None
-      sorted.foreach { t =>
-        val us = tsToUs(t.ts)
-        cur match {
-          case Some(ss) if us - ss.end <= gapUs =>
-            cur = Some(ss.copy(end = math.max(ss.end, us), n = ss.n + 1))
-          case Some(ss) =>
-            out += emit(user, ss)
-            cur = Some(SessState(us, us, 1))
-          case None =>
-            cur = Some(SessState(us, us, 1))
-        }
-      }
-      cur.foreach { ss =>
-        sess.update(ss)
-        // one live timer per key, strictly ahead of the watermark
-        val at = math.max(ss.end / 1000L + gapMs, tv.getCurrentWatermarkInMs + 1)
-        if (!timer.exists() || timer.get() != at) {
-          if (timer.exists()) getHandle.deleteTimer(timer.get())
-          getHandle.registerTimer(at)
-          timer.update(at)
-        }
-      }
-      out.iterator
-    }
-    override def handleExpiredTimer(user: Long,
-        tv: org.apache.spark.sql.streaming.TimerValues,
-        info: org.apache.spark.sql.streaming.ExpiredTimerInfo): Iterator[SessionOut] = {
-      if (!sess.exists()) { timer.clear(); return Iterator.empty }
-      val ss = sess.get()
-      // stale timer: the session was extended past this expiry by later
-      // input in the SAME batch ordering — let the live timer handle it
-      if (ss.end / 1000L + gapMs > info.getExpiryTimeInMs) return Iterator.empty
-      sess.clear(); timer.clear()
-      Iterator.single(emit(user, ss))
-    }
-  }
-
-  /** See [[SessionProcessor]]. */
-  def sessionizeTws(stream: Dataset[Tick], gapMinutes: Int = 30,
-      watermarkDelay: String = "10 minutes"): Dataset[SessionOut] = {
-    import stream.sparkSession.implicits._
-    stream.withWatermark("ts", watermarkDelay)
-      .groupByKey(_.user_id)
-      .transformWithState(new SessionProcessor(gapMinutes),
-        org.apache.spark.sql.streaming.TimeMode.EventTime(), OutputMode.Append())
-  }
-
   /** Streaming OHLC bar construction — the reference's core stream
     * consumer (ticks → HISTORIC.MINUTE bars; here hourly to mirror the
     * batch q17). min_by/max_by on (ts, event_id) give deterministic

@@ -18,45 +18,24 @@ class ConnectedComponentsSpec extends SparkSpec {
     assert(Seq(20L, 21L, 22L).map(cc).distinct == Seq(20L))
   }
 
-  test("bounded lazy variant matches the eager loop, including past its iteration budget") {
+  test("propagateLabels matches the driver labels, including past one 8-round batch") {
     import spark.implicits._
     def asMap(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    // small graph: converges inside the budget (no fallback)
+    // small graph: converges inside the first batch
     val small = Seq((1L, 2L), (2L, 3L), (10L, 11L), (20L, 21L), (21L, 22L))
       .toDF("id_a", "id_b")
-    assert(asMap(Dedup.connectedComponentsBounded(small)) ==
-           asMap(Dedup.connectedComponents(small)))
+    assert(asMap(Dedup.propagateLabels(small)) == asMap(Dedup.connectedComponents(small)))
     // 40-node chain with ids arranged so the minimum sits at one END:
-    // diameter 39 >> 8 forces the convergence check to fail and the
-    // eager fallback (original edges + shortcuts) to finish the job
+    // diameter 39 > 8, so the first batches end unconverged and later
+    // ones continue from the reached labels over the original edges
     val chain = (1L until 40L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val bounded = asMap(Dedup.connectedComponentsBounded(chain, iters = 3))
-    val eager = asMap(Dedup.connectedComponents(chain, maxIter = 50))
-    assert(bounded == eager, "fallback must produce the exact eager labels")
-    assert(bounded.values.toSet == Set(1L), "the whole chain is one component")
+    val loop = asMap(Dedup.propagateLabels(chain))
+    assert(loop == asMap(Dedup.connectedComponents(chain)))
+    assert(loop.values.toSet == Set(1L), "the whole chain is one component")
     // real pair list: d4's exact near-dup pairs
     val pairs = Dedup.ngramJaccard(spark, sf).select("id_a", "id_b")
-    assert(asMap(Dedup.connectedComponentsBounded(pairs)) ==
-           asMap(Dedup.connectedComponents(pairs)))
-  }
-
-  test("bounded variant: shuffle-join path (gate=0) and explicit round partitioning match the eager labels") {
-    import spark.implicits._
-    def asMap(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L),
-      (20L, 21L), (21L, 22L), (20L, 22L)).toDF("id_a", "id_b")
-    val eager = asMap(Dedup.connectedComponents(pairs))
-    // broadcastMaxEdges = 0 forces the shuffle-join fallback every round
-    // — the path a 100 TB-scale label frame takes
-    assert(asMap(Dedup.connectedComponentsBounded(pairs, broadcastMaxEdges = 0L)) == eager)
-    // the single-node tuning knob (packed rounds) must not change labels
-    assert(asMap(Dedup.connectedComponentsBounded(pairs, roundPartitions = Some(4))) == eager)
-    // shuffle path + fallback (diameter > iters) together
-    val chain = (1L until 30L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    assert(asMap(Dedup.connectedComponentsBounded(chain, iters = 3, broadcastMaxEdges = 0L)) ==
-           asMap(Dedup.connectedComponents(chain, maxIter = 50)))
+    assert(asMap(Dedup.propagateLabels(pairs)) == asMap(Dedup.connectedComponents(pairs)))
   }
 
   test("dedupedCorpus keeps exactly one doc per cluster plus all unpaired docs") {

@@ -152,10 +152,19 @@ class PropertySpec extends SparkSpec {
     import spark.implicits._
     val edgeGen = Gen.listOfN(25, Gen.zip(Gen.choose(0L, 15L), Gen.choose(0L, 15L)))
       .map(_.filter(e => e._1 != e._2))
-    samples(edgeGen, 5).foreach { edges =>
+    // plus a 20-node chain whose minimum sits at one end: diameter 19
+    // takes the distributed loop through three 8-round batches
+    val chain = (1L until 20L).map(i => (i + 1, i))
+    (samples(edgeGen, 5) :+ chain).foreach { edges =>
       if (edges.nonEmpty) {
-        val cc = Dedup.connectedComponents(edges.toDF("id_a", "id_b"))
-          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+        val pairs = edges.toDF("id_a", "id_b")
+        def labels(df: org.apache.spark.sql.DataFrame) =
+          df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+        // the public operator (driver union-find here) and the
+        // distributed loop must BOTH match the brute force
+        val cc = labels(Dedup.connectedComponents(pairs))
+        assert(labels(Dedup.propagateLabels(pairs)) == cc,
+          s"propagateLabels diverged from connectedComponents on $edges")
         // brute-force union-find
         val parent = scala.collection.mutable.Map[Long, Long]()
         def find(x: Long): Long = {

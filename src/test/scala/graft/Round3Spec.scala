@@ -84,11 +84,11 @@ class Round3Spec extends SparkSpec {
       (20L, 21L), (21L, 22L), (20L, 22L)).toDF("id_a", "id_b")
     val dir = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
     val viaReliable = withCheckpointDir(Some(dir)) {
-      Dedup.connectedComponents(pairs)
+      Dedup.propagateLabels(pairs)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     }
     val viaLocal = withCheckpointDir(None) {
-      Dedup.connectedComponents(pairs)
+      Dedup.propagateLabels(pairs)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     }
     assert(viaReliable == viaLocal)

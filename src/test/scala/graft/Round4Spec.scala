@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.{SparkSpec, SparkEntry, Tables}
 
 /** Round-4 hardening: the composed d22 dedup pipeline (LSH pairs →
-  * bounded CC → keep-min corpus) and the measured d19 LSH recall gate
+  * CC → keep-min corpus) and the measured d19 LSH recall gate
   * against the analytic banding bound.
   */
 class Round4Spec extends SparkSpec {
@@ -31,7 +31,7 @@ class Round4Spec extends SparkSpec {
     }
   }
 
-  test("bounded CC with a reliable checkpoint dir matches the eager labels (converged and fallback paths)") {
+  test("propagateLabels with a reliable checkpoint dir matches the driver labels (one batch and several)") {
     import spark.implicits._
     def asMap(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -39,19 +39,19 @@ class Round4Spec extends SparkSpec {
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L),
       (20L, 21L), (21L, 22L)).toDF("id_a", "id_b")
     val chain = (1L until 25L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val (eagerPairs, eagerChain) = withCheckpointDir(None) {
-      (asMap(Dedup.connectedComponents(pairs)),
-       asMap(Dedup.connectedComponents(chain, maxIter = 50)))
+    val (driverPairs, driverChain) = withCheckpointDir(None) {
+      (asMap(Dedup.connectedComponents(pairs)), asMap(Dedup.connectedComponents(chain)))
     }
     withCheckpointDir(Some(dir)) {
-      assert(asMap(Dedup.connectedComponentsBounded(pairs, iters = 4)) == eagerPairs)
+      assert(asMap(Dedup.propagateLabels(pairs)) == driverPairs)
       // EVERY round's cut must be committed to reliable storage (edges +
       // one per round), not just the topmost marked RDD — that is the
       // executor-loss story an installed checkpoint dir exists for
       val rddDirs = new java.io.File(dir).listFiles().flatMap(_.listFiles())
         .count(f => f.isDirectory && f.getName.startsWith("rdd-"))
-      assert(rddDirs >= 5, s"expected edges + 4 round checkpoints, found $rddDirs rdd dirs")
-      assert(asMap(Dedup.connectedComponentsBounded(chain, iters = 3)) == eagerChain)
+      assert(rddDirs >= 5, s"expected edges + per-round checkpoints, found $rddDirs rdd dirs")
+      // diameter 24: three batches, each continuing from the last
+      assert(asMap(Dedup.propagateLabels(chain)) == driverChain)
     }
   }
 

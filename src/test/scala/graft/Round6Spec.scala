@@ -187,28 +187,29 @@ class Round6Spec extends SparkSpec {
     }
   }
 
-  test("connectedComponentsAuto: driver and distributed paths agree with the eager loop") {
+  test("connectedComponents: driver union-find and propagateLabels agree") {
     import spark.implicits._
     // chain 1-2-3, pair 10-11, singleton edge 20-21, cross-chain 3-20
     val pairs = Seq((2L, 1L), (2L, 3L), (10L, 11L), (20L, 21L), (3L, 20L))
       .toDF("id_a", "id_b")
     def labelSet(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => r.getLong(0) -> r.getLong(1)).toSet
-    val eager = labelSet(Dedup.connectedComponents(pairs)
-      .select("node", "cluster_id"))
-    val driver = labelSet(Dedup.connectedComponentsAuto(pairs))
-    val dist = labelSet(Dedup.connectedComponentsAuto(pairs, maxDriverEdges = 0L))
-    assert(driver == eager, s"driver path $driver != eager $eager")
-    assert(dist == eager, s"distributed path $dist != eager $eager")
-    assert(eager.exists(_ == (21L -> 1L)), "cross-chain merge missing")
+    val driver = labelSet(Dedup.connectedComponents(pairs))
+    val dist = labelSet(Dedup.propagateLabels(pairs))
+    assert(dist == driver, s"distributed loop $dist != driver union-find $driver")
+    assert(driver.exists(_ == (21L -> 1L)), "cross-chain merge missing")
   }
 
-  test("connectedComponentsAuto: non-long id types route to the distributed loop and label correctly") {
+  test("connectedComponents: non-long id types route to the distributed loop and label correctly") {
     import spark.implicits._
     val pairs = Seq((2, 1), (2, 3), (10, 11)).toDF("id_a", "id_b") // IntegerType ids
-    val got = Dedup.connectedComponentsAuto(pairs)
+    val got = Dedup.connectedComponents(pairs)
       .collect().map(r => r.getInt(0) -> r.getInt(1)).toSet
     assert(got == Set(1 -> 1, 2 -> 1, 3 -> 1, 10 -> 10, 11 -> 10))
+    // an empty INT pair frame labels with INT ids too, like a non-empty one
+    val empty = Dedup.connectedComponents(pairs.filter(col("id_a") < 0))
+    assert(empty.count() == 0)
+    assert(empty.schema.map(_.dataType.simpleString) == Seq("int", "int"))
   }
 
   test("LSH banding is word-ORDER invariant (k=1 shingles): reordered near-dups share all bands") {

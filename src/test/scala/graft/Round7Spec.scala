@@ -453,7 +453,7 @@ class Round7Spec extends SparkSpec {
   }
 
   test("d20 parity gate: the distributed bounded CC loop matches the size-gated labels on the real pair list") {
-    // d20's registered entry runs connectedComponentsAuto (driver
+    // d20's registered entry runs connectedComponents (driver
     // union-find at this edge count); the distributed loop must stay
     // label-identical on the SAME corpus pair list so the registered
     // entry's oracle verification keeps covering it
@@ -461,8 +461,8 @@ class Round7Spec extends SparkSpec {
       .localCheckpoint(eager = true)
     def labels(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => r.getLong(0) -> r.getLong(1)).toSet
-    val auto = labels(Dedup.connectedComponentsAuto(pairs))
-    val bounded = labels(Dedup.connectedComponentsBounded(pairs))
+    val auto = labels(Dedup.connectedComponents(pairs))
+    val bounded = labels(Dedup.propagateLabels(pairs))
     assert(auto == bounded, "bounded loop diverged from the size-gated labels")
     assert(auto.nonEmpty)
     pairs.unpersist()

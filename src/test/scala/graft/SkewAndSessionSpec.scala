@@ -73,37 +73,4 @@ class SkewAndSessionSpec extends SparkSpec {
       col("sa") < col("sb") && col("ea") >= col("sb")).count()
     assert(overlaps == 0)
   }
-
-  test("transformWithState sessionizer (event-time timers) emits the same closed sessions as the flatMapGroupsWithState one") {
-    import spark.implicits._
-    implicit val sc = spark.sqlContext
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val batch = Tables.events(spark, sf)
-        .select("event_id", "ts", "user_id", "event_type", "value")
-        .as[Tick].collect().toSeq.sortBy(t => (t.ts.getTime, t.event_id))
-      val input = MemoryStream[Tick]
-      input.addData(batch)
-      EventStream.runToMemory(
-        EventStream.sessionizeTws(input.toDS()).toDF(), "sess_tws_out", OutputMode.Append)
-      val got = spark.table("sess_tws_out")
-      // same data through the mapGroupsWithState sessionizer: the two
-      // implementations must agree row-for-row on closed sessions
-      val input2 = MemoryStream[Tick]
-      input2.addData(batch)
-      EventStream.runToMemory(
-        EventStream.sessionize(input2.toDS()).toDF(), "sess_mgws_out", OutputMode.Append)
-      val want = spark.table("sess_mgws_out")
-      assert(got.count() > 0)
-      assert(got.exceptAll(want).count() == 0 && want.exceptAll(got).count() == 0,
-        "timer-based and timeout-based sessionizers must agree exactly")
-    } finally {
-      prev match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-    }
-  }
 }

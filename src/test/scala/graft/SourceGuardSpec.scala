@@ -8,11 +8,13 @@ import org.scalatest.funsuite.AnyFunSuite
   * Verify), one session factory (graft.Harness), one checkpoint policy
   * (graft.ops.Checkpoints), one sink replay guard
   * (graft.sources.Sinks.unseen), one layout marker
-  * (graft.ops.Artifacts) and one running-sum rule
-  * (graft.operators.Silver.rangedRunningSum). A fifth main, a second
-  * `SparkSession.builder`, an operator that picks its own reliable cut
-  * or checkpoint dir, a hand-rolled pruned guard, a hand-written
-  * `_layout` or a second range layout fails here, before it can drift. */
+  * (graft.ops.Artifacts), one running-sum rule
+  * (graft.operators.Silver.rangedRunningSum) and one connected-components
+  * operator (graft.operators.Dedup.connectedComponents). A fifth main, a
+  * second `SparkSession.builder`, an operator that picks its own
+  * reliable cut or checkpoint dir, a hand-rolled pruned guard, a
+  * hand-written `_layout`, a second range layout or a second CC variant
+  * fails here, before it can drift. */
 class SourceGuardSpec extends AnyFunSuite {
 
   private val root = java.nio.file.Paths.get("src/main/scala")
@@ -75,5 +77,17 @@ class SourceGuardSpec extends AnyFunSuite {
         (bad ++ uses.collect { case (f, n) if n != 1 => s"$f: $n uses" }).mkString("\n"))
     val fixed = offenders(Seq("partitions: Int = 32"))((_, _) => false)
     assert(fixed.isEmpty, "size slices from the input, not a fixed default:\n" + fixed.mkString("\n"))
+  }
+
+  test("one connected-components operator: Dedup.connectedComponents(pairs), no variants or knobs") {
+    val defs = sources.collect { case (f, text) =>
+      f -> (text.split("def connectedComponents", -1).length - 1) }.filter(_._2 > 0)
+    assert(defs == Seq("graft/operators/Dedup.scala" -> 1),
+      "one CC definition, in Dedup:\n" + defs.mkString("\n"))
+    val knobs = offenders(Seq("connectedComponentsBounded", "connectedComponentsAuto",
+      "roundPartitions", "broadcastMaxEdges", "maxDriverEdges", "driverMaxEdges",
+      "maxIter"))((_, _) => false)
+    assert(knobs.isEmpty, "label components with Dedup.connectedComponents(pairs):\n" +
+      knobs.mkString("\n"))
   }
 }

@@ -152,7 +152,7 @@ class SqlSurfaceSpec extends SparkSpec {
       "SELECT * FROM minhash_pairs('g_docs')" -> operators.Dedup.minhashLsh(spark, sf),
       "SELECT * FROM simhash_pairs('g_docs')" -> operators.Dedup.simhash(spark, sf),
       "SELECT * FROM dup_clusters('g_docs')" ->
-        operators.Dedup.connectedComponentsAuto(
+        operators.Dedup.connectedComponents(
           operators.Dedup.ngramJaccard(spark, sf).select("id_a", "id_b")).orderBy("node"),
       "SELECT * FROM ngram_topk('g_docs')" -> operators.CorpusStats.ngramTopK(spark, sf),
       "SELECT * FROM vocab_coverage('g_docs')" -> operators.CorpusStats.vocabCoverage(spark, sf),
@@ -162,6 +162,14 @@ class SqlSurfaceSpec extends SparkSpec {
       assert(canon(viaSql) == canon(scala), s"TVF != entry for: $sql")
       assert(viaSql.count() > 0, s"empty TVF result for: $sql")
     }
+    // an INT doc_id view without near-dup pairs labels as INT, the type
+    // a view with pairs gets
+    import spark.implicits._
+    Seq((1, "en", "web", "alpha beta gamma delta"), (2, "en", "web", "one two three four"))
+      .toDF("doc_id", "lang", "source", "text").createOrReplaceTempView("g_int_docs")
+    val noDups = spark.sql("SELECT * FROM dup_clusters('g_int_docs')")
+    assert(noDups.count() == 0)
+    assert(noDups.schema.map(_.dataType.simpleString) == Seq("int", "int"))
     // parameter plumbing
     assert(spark.sql("SELECT * FROM ngram_topk('g_docs', 2, 10)").count() == 10)
     assert(spark.sql("SELECT * FROM vocab_coverage('g_docs', 7)").count() == 7)
