@@ -166,17 +166,23 @@ object SqlSurface {
     graftshim.analyzed(plan)
   }
 
-  /** `event_pattern(events_view[, span_us[, starts, mids, ends[,
-    * min_mid, max_mid]]])`: the q57/q64 CEP automaton
-    * (`start mid{m,n} end` within span, skip-past-last-row; default
-    * m=0, n=∞ is q57's `mid*`) over a (user_id, ts, event_id,
-    * event_type) view; tag sets are comma-separated lists (mids may
-    * be ''). */
-  private def eventPatternBuilder(es: Seq[Expression]): LogicalPlan = {
-    val fn = "event_pattern"
-    require(es.length == 1 || es.length == 2 || es.length == 5 || es.length == 7,
-      s"$fn(events_view[, span_us[, starts, mids, ends[, min_mid, max_mid]]]) " +
-        s"takes 1, 2, 5 or 7 args, got ${es.length}")
+  /** The CEP TVFs over a (user_id, ts, event_id, event_type) view, both
+    * run by the one automaton ([[graft.functions.CepMachine]], `start
+    * mid{m,n} end` within span; tag sets are comma-separated lists, mids
+    * may be ''; a start type that is also a mid makes matches overlap):
+    *  - `event_pattern(events_view[, span_us[, starts, mids, ends[,
+    *    min_mid, max_mid]]])`, defaults = q57's `view click* purchase`
+    *    (m=0, n=∞);
+    *  - `event_pattern_skip_next(events_view[, span_us[, starts, mids,
+    *    ends]])`, defaults = q65's `view (click|view)* purchase`.
+    * They differ only in their default mids and in taking mid bounds. */
+  private def eventPatternBuilder(fn: String, defaultMids: Seq[String], bounds: Boolean)(
+      es: Seq[Expression]): LogicalPlan = {
+    val arities = if (bounds) Seq(1, 2, 5, 7) else Seq(1, 2, 5)
+    require(arities.contains(es.length),
+      s"$fn(events_view[, span_us[, starts, mids, ends" +
+        s"${if (bounds) "[, min_mid, max_mid]" else ""}]]) " +
+        s"takes ${arities.init.mkString(", ")} or ${arities.last} args, got ${es.length}")
     val events = table(strArg(fn, es, 0))
     val span = if (es.length >= 2) longArg(fn, es, 1) else Cep.SpanUs
     val plan =
@@ -185,28 +191,7 @@ object SqlSurface {
           csvArg(fn, es, 2), csvArg(fn, es, 3), csvArg(fn, es, 4),
           if (es.length == 7) longArg(fn, es, 5).toInt else 0,
           if (es.length == 7) longArg(fn, es, 6).toInt else Int.MaxValue)
-      else Cep.eventPatternOf(events, span)
-    graftshim.analyzed(plan)
-  }
-
-  /** `event_pattern_skip_next(events_view[, span_us[, starts, mids,
-    * ends]])`: the q65 AFTER MATCH SKIP TO NEXT ROW variant —
-    * overlapping matches; mids MAY overlap starts (that overlap is what
-    * makes matches overlap, see EventMatches). Defaults = q65's
-    * `view (click|view)* purchase`. */
-  private def eventPatternSkipBuilder(es: Seq[Expression]): LogicalPlan = {
-    val fn = "event_pattern_skip_next"
-    require(es.length == 1 || es.length == 2 || es.length == 5,
-      s"$fn(events_view[, span_us[, starts, mids, ends]]) takes 1, 2 or 5 args, got ${es.length}")
-    val events = table(strArg(fn, es, 0))
-    val span = if (es.length >= 2) longArg(fn, es, 1) else Cep.SpanUs
-    val plan =
-      if (es.length == 5)
-        Cep.eventPatternOf(events, span,
-          csvArg(fn, es, 2), csvArg(fn, es, 3), csvArg(fn, es, 4),
-          skipToNextRow = true)
-      else Cep.eventPatternOf(events, span,
-        midTypes = Seq("click", "view"), skipToNextRow = true)
+      else Cep.eventPatternOf(events, span, midTypes = defaultMids)
     graftshim.analyzed(plan)
   }
 
@@ -592,8 +577,9 @@ object SqlSurface {
     "ngram_jaccard" -> (ngramJaccardBuilder _),
     "containment_pairs" -> (containmentBuilder _),
     "bm25_search" -> (bm25Builder _),
-    "event_pattern" -> (eventPatternBuilder _),
-    "event_pattern_skip_next" -> (eventPatternSkipBuilder _),
+    "event_pattern" -> eventPatternBuilder("event_pattern", Seq("click"), bounds = true) _,
+    "event_pattern_skip_next" ->
+      eventPatternBuilder("event_pattern_skip_next", Seq("click", "view"), bounds = false) _,
     "exact_dedup" -> exactDedupBuilder,
     "span_dedup" -> spanDedupBuilder,
     "boilerplate_scrub" -> (boilerplateBuilder _),

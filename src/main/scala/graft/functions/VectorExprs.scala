@@ -1301,46 +1301,86 @@ case class LegLookup(left: Expression, right: Expression)
     copy(left = l, right = r)
 }
 
-/** MATCH_RECOGNIZE-style event-pattern automaton over ONE key's
-  * time-ordered events (the q57 CEP core): greedy matches of
-  * `view click* purchase` with the whole match inside `spanUs`
-  * microseconds of the opening view. Input rows are (ts, event_id,
-  * tag) with tag 0=start / 1=mid / 2=end / 3=other / 4=start-or-mid,
-  * sorted ascending (struct sort on the unique (ts, event_id) key
-  * makes the order total).
+/** The one MATCH_RECOGNIZE-style automaton behind the CEP family
+  * `start mid{minMid,maxMid} end` — q57, q64 and q65, in batch
+  * ([[EventMatches]]) and in the stream
+  * (`graft.streaming.EventStream.cepStream`). [[step]] takes ONE key's
+  * rows in ascending (ts, id) order, tag 0=start / 1=mid / 2=end /
+  * 3=other / 4=start-or-mid; a whole match lies inside `spanUs`
+  * microseconds of its start row.
   *
-  * Two AFTER MATCH modes (SQL:2016 §R021):
+  * AFTER MATCH SKIP TO NEXT ROW (SQL:2016 §R021): matching resumes at
+  * the row after a matched start, so matches may OVERLAP — exactly when
+  * a start row can also be consumed as a mid (tag 4, e.g. q65's
+  * `view (click|view)* purchase`). Every open attempt (one per
+  * un-killed start row) is kept: a mid advances all, per-attempt
+  * overflow/expiry kills individually, a pure start or an `other` row
+  * kills all (strict contiguity — no open attempt can consume it), and
+  * an end row closes EVERY in-span attempt (a match iff its mid count is
+  * in bounds). Exact because the sequential semantics evaluates each
+  * start row's attempt independently, and attempts here never interact.
+  * With disjoint sets (no tag 4) at most one attempt is open and the
+  * machine is the single-attempt SKIP PAST LAST ROW automaton q57/q64
+  * declare: a failed attempt's interior holds only mid rows, which open
+  * nothing, so resuming there loses no match (PropertySpec pins both
+  * regimes against hand-written references).
   *
-  *  - `skipToNext = false` (SKIP PAST LAST ROW, the default): one
-  *    attempt at a time. Single-pass no-backtrack is EXACT for
-  *    disjoint start/mid/end sets: on any failure/expiry/restart,
-  *    rescanning from start+1 only meets mid rows (which cannot open a
-  *    match) before the current row, so the automaton's "evaluate the
-  *    current row from IDLE" shortcut visits the same states the
-  *    sequential semantics would. Tag 4 is rejected here: with a
-  *    bounded maxMid, a failed long attempt can hide a shorter inner
-  *    attempt this single-attempt machine would not track.
+  * An open attempt is (sTs, sId, midAtOpen), midAtOpen the global mid
+  * counter when it opened, so n_mid = midCount - midAtOpen without
+  * touching attempts on a mid row. Appended in ts order, both eviction
+  * conditions are front-monotone along the deque (sTs ascends: expiry
+  * pops the oldest first; midAtOpen ascends: overflow is largest at the
+  * front), so a row costs O(1) amortized — not O(open), which is
+  * O(span²) per key on a whale whose span holds many start∩mid rows.
+  * [[openAttempts]] exports them as restart-stable (s_ts, s_id, n_mid);
+  * [[reopen]] restores them in that order.
   *
-  *  - `skipToNext = true` (SKIP TO NEXT ROW): matching resumes at the
-  *    row AFTER the matched start, so matches may OVERLAP — meaningful
-  *    exactly when a start row can also be consumed as a mid (tag 4,
-  *    e.g. `view (click|view)* purchase`). The machine keeps every
-  *    open attempt (one per un-killed start row): a mid advances all,
-  *    per-attempt overflow/expiry kills individually, a pure start or
-  *    an `other` row kills all (strict contiguity — no open attempt
-  *    can consume it), and an end row closes EVERY in-span attempt
-  *    (match iff its mid count is in bounds). This is exact because
-  *    the sequential semantics evaluates each start row's attempt
-  *    independently, and attempts here never interact. Open-attempt
-  *    count is bounded by the start rows inside one span window.
-  *    With disjoint sets (no tag 4) it degenerates to one open
-  *    attempt and equals SKIP PAST LAST ROW (spec-pinned).
-  *
-  * Emits array<struct<start_event_id, start_ts, end_event_id, end_ts,
-  * n_mid>> — one element per completed match, in match order (ties on
-  * one end row in start order). */
+  * @param emit called once per match, in match order (ties on one end
+  *   row in start order): (start_id, start_ts, end_id, end_ts, n_mid) */
+final class CepMachine(spanUs: Long, minMid: Int = 0, maxMid: Int = Int.MaxValue)(
+    emit: (Long, Long, Long, Long, Int) => Unit) {
+  private final class Open(val sTs: Long, val sId: Long, val midAtOpen: Long)
+  private val open = scala.collection.mutable.ArrayDeque.empty[Open]
+  private var midCount = 0L
+
+  def step(ts: Long, id: Long, tag: Int): Unit = {
+    // span expiry: an attempt the current row falls outside of could not
+    // consume ANY later row either (ts ascends)
+    while (open.nonEmpty && ts - open.head.sTs > spanUs) open.removeHead()
+    tag match {
+      case 2 =>
+        open.foreach { a =>
+          val nMid = midCount - a.midAtOpen
+          if (nMid >= minMid && nMid <= maxMid) emit(a.sId, a.sTs, id, ts, nMid.toInt)
+        }
+        open.clear()
+      case 1 | 4 => // a start-or-mid advances every open attempt AND opens its own
+        midCount += 1
+        while (open.nonEmpty && midCount - open.head.midAtOpen > maxMid.toLong)
+          open.removeHead()
+        if (tag == 4) open.append(new Open(ts, id, midCount))
+      case 0 =>
+        open.clear()
+        open.append(new Open(ts, id, midCount))
+      case _ =>
+        open.clear()
+    }
+  }
+
+  def openAttempts: Seq[(Long, Long, Int)] =
+    open.iterator.map(a => (a.sTs, a.sId, (midCount - a.midAtOpen).toInt)).toSeq
+
+  def reopen(sTs: Long, sId: Long, nMid: Int): Unit =
+    open.append(new Open(sTs, sId, midCount - nMid))
+}
+
+/** [[CepMachine]] as a Catalyst expression, over ONE key's events: an
+  * array<struct<ts, event_id, tag>> sorted ascending (struct sort on
+  * the unique (ts, event_id) key makes the order total). Emits
+  * array<struct<start_event_id, start_ts, end_event_id, end_ts, n_mid>>
+  * — one element per completed match, in match order. */
 case class EventMatches(child: Expression, spanUs: Long,
-    minMid: Int = 0, maxMid: Int = Int.MaxValue, skipToNext: Boolean = false)
+    minMid: Int = 0, maxMid: Int = Int.MaxValue)
     extends UnaryExpression with CodegenFallback {
   require(spanUs > 0, s"spanUs must be positive, got $spanUs")
   require(minMid >= 0 && maxMid >= minMid,
@@ -1352,101 +1392,16 @@ case class EventMatches(child: Expression, spanUs: Long,
     StructField("end_ts", TimestampType, nullable = false),
     StructField("n_mid", IntegerType, nullable = false))), containsNull = false)
 
-  // Open attempt for skip-to-next mode: (sTs, sId, midAtOpen) where
-  // midAtOpen is the global mid-counter value when the attempt opened,
-  // so nMid = midCount - midAtOpen without touching the attempt on every
-  // mid row. Appended in ts order, so BOTH eviction conditions are
-  // front-monotone along the deque: sTs ascends (span expiry pops the
-  // oldest first) and midAtOpen ascends (overflow nMid is largest at the
-  // front). Every row is then O(1) amortized — each attempt is appended
-  // once and removed once — where a per-row all-attempts advance would
-  // be O(open), i.e. O(span²) per key on a whale whose span holds k
-  // start∩mid rows.
-  private final class OpenAtt(val sTs: Long, val sId: Long, val midAtOpen: Long)
-
-  override def nullSafeEval(in: Any): Any =
-    if (skipToNext) evalSkipToNext(in) else evalPastLast(in)
-
-  private def evalPastLast(in: Any): Any = {
+  override def nullSafeEval(in: Any): Any = {
     val arr = in.asInstanceOf[ArrayData]
     val n = arr.numElements()
     val out = scala.collection.mutable.ArrayBuffer.empty[Any]
-    var started = false
-    var sTs = 0L; var sId = 0L; var nMid = 0
+    val machine = new CepMachine(spanUs, minMid, maxMid)(
+      (sId, sTs, eId, eTs, nMid) => out += InternalRow(sId, sTs, eId, eTs, nMid))
     var i = 0
     while (i < n) {
       val row = arr.getStruct(i, 3)
-      val ts = row.getLong(0)
-      val id = row.getLong(1)
-      val tag = row.getInt(2)
-      if (tag == 4)
-        throw new IllegalStateException(
-          "start∩mid tags require skipToNext mode (see scaladoc)")
-      val inSpan = started && ts - sTs <= spanUs
-      if (inSpan && tag == 2) {
-        // an end row always closes the attempt: a MATCH iff the mid
-        // count is inside the quantifier bounds, a dead attempt
-        // otherwise (an end the pattern cannot consume kills it, the
-        // strict-contiguity automaton semantics)
-        if (nMid >= minMid && nMid <= maxMid) out += InternalRow(sId, sTs, id, ts, nMid)
-        started = false
-      } else if (inSpan && tag == 1) {
-        nMid += 1
-        // mid overflow: the attempt can never close — die now. The
-        // single-pass exactness argument is unchanged: every interior
-        // row of a dead attempt is a non-start row, so a rescan from
-        // any of them opens nothing; skipping to the next start row
-        // (which RESTARTS regardless of attempt state) loses no match.
-        if (nMid > maxMid) started = false
-      } else if (tag == 0) {
-        started = true; sTs = ts; sId = id; nMid = 0
-      } else {
-        started = false
-      }
-      i += 1
-    }
-    new GenericArrayData(out.toArray)
-  }
-
-  private def evalSkipToNext(in: Any): Any = {
-    val arr = in.asInstanceOf[ArrayData]
-    val n = arr.numElements()
-    val out = scala.collection.mutable.ArrayBuffer.empty[Any]
-    val open = scala.collection.mutable.ArrayDeque.empty[OpenAtt]
-    var midCount = 0L
-    var i = 0
-    while (i < n) {
-      val row = arr.getStruct(i, 3)
-      val ts = row.getLong(0)
-      val id = row.getLong(1)
-      val tag = row.getInt(2)
-      // span expiry is per attempt and front-monotone: an attempt the
-      // current row falls outside of could not consume ANY later row
-      // either (ts ascends), and the oldest attempt sits at the front
-      while (open.nonEmpty && ts - open.head.sTs > spanUs) open.removeHead()
-      tag match {
-        case 2 => // closes every open attempt; matches emit in start order
-          open.foreach { a =>
-            val nMid = midCount - a.midAtOpen
-            if (nMid >= minMid && nMid <= maxMid)
-              out += InternalRow(a.sId, a.sTs, id, ts, nMid.toInt)
-          }
-          open.clear()
-        case 1 =>
-          midCount += 1
-          while (open.nonEmpty && midCount - open.head.midAtOpen > maxMid.toLong)
-            open.removeHead()
-        case 0 => // a pure start: no open attempt can consume it — all die
-          open.clear()
-          open.append(new OpenAtt(ts, id, midCount))
-        case 4 => // start-or-mid: advances every open attempt AND opens its own
-          midCount += 1
-          while (open.nonEmpty && midCount - open.head.midAtOpen > maxMid.toLong)
-            open.removeHead()
-          open.append(new OpenAtt(ts, id, midCount))
-        case _ =>
-          open.clear()
-      }
+      machine.step(row.getLong(0), row.getLong(1), row.getInt(2))
       i += 1
     }
     new GenericArrayData(out.toArray)
@@ -1479,12 +1434,8 @@ object VectorExprs {
   def bloomProbe(c: Column, bits: BloomBits): Column = toCol(BloomProbe(toExpr(c), bits))
   def islandRuns(c: Column, k: Int): Column = toCol(IslandRuns(toExpr(c), k))
   def packSeqs(c: Column, capacity: Int): Column = toCol(PackSeqs(toExpr(c), capacity))
-  def eventMatches(c: Column, spanUs: Long): Column = toCol(EventMatches(toExpr(c), spanUs))
   def eventMatches(c: Column, spanUs: Long, minMid: Int, maxMid: Int): Column =
     toCol(EventMatches(toExpr(c), spanUs, minMid, maxMid))
-  def eventMatches(c: Column, spanUs: Long, minMid: Int, maxMid: Int,
-      skipToNext: Boolean): Column =
-    toCol(EventMatches(toExpr(c), spanUs, minMid, maxMid, skipToNext))
   def legLookup(legs: Column, legId: Column): Column =
     toCol(LegLookup(toExpr(legs), toExpr(legId)))
   def normalizeF(c: Column): Column = toCol(NormalizeF(toExpr(c)))
@@ -1522,11 +1473,12 @@ object VectorExprs {
       es => TopKByScore(es(0), es(1).eval().asInstanceOf[Int])
         .toAggregateExpression(), "scala_udf")
     // CEP: event_matches(sorted array<struct<ts,event_id,tag>>, span_us
-    // [, min_mid, max_mid]) — the `start mid{m,n} end` automaton.
-    // Tag-set parameterization happens in SQL (the caller's CASE WHEN
-    // builds the tag), so any disjoint start/mid/end assignment — q57's
-    // defaults included — is already reachable from spark.sql; the
-    // event_pattern TVF (SqlSurface) wraps the common whole-table shape.
+    // [, min_mid, max_mid]) — the `start mid{m,n} end` automaton
+    // (CepMachine). Tag-set parameterization happens in SQL (the
+    // caller's CASE WHEN builds the tag: 0 start, 1 mid, 2 end, 3 other,
+    // 4 start-and-mid), so every pattern of the family — q57's, q64's
+    // and q65's included — is reachable from spark.sql; the
+    // event_pattern TVFs (SqlSurface) wrap the common whole-table shape.
     reg.createOrReplaceTempFunction("event_matches",
       es => {
         def asLong(e: Expression): Long = e.eval() match {

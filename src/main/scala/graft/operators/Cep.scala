@@ -24,6 +24,11 @@ import graft.Tables
   * Beyond that the gate is the driver-side reference automaton
   * parity spec.
   *
+  * One automaton, [[graft.functions.CepMachine]], runs every pattern of
+  * the family (q57, q64, q65) in batch here and in the stream
+  * (`graft.streaming.EventStream.cepStream`); the tag sets alone decide
+  * whether matches can overlap.
+  *
   * Scale shape: the per-key ordered scan IS the canonical CEP
   * execution model (Flink runs exactly this automaton per key);
   * the distribution axis is the key — one hash shuffle on user_id,
@@ -45,9 +50,9 @@ object Cep {
   /** q64 registered entry: bounded-quantifier CEP with start
     * alternation — `(view|signup) click{1,2} purchase` within the span.
     * Exercises both round-13 quantifier extensions on the SAME
-    * single-pass automaton: the start SET is q57's existing alternation
+    * automaton: the start SET is q57's existing alternation
     * generalized past one type, and the `{1,2}` bound adds mid
-    * overflow/underflow kill states ([[graft.functions.EventMatches]]
+    * overflow/underflow kill states ([[graft.functions.CepMachine]]
     * minMid/maxMid). Oracle = the q57 recursive-CTE machine with the
     * two extra transitions replayed. */
   def eventPatternBounded(s: SparkSession, d: String): DataFrame =
@@ -58,37 +63,38 @@ object Cep {
     * overlapping-match mode) — `view (click|view)* purchase` within the
     * span. The start type is ALSO a mid type, so a match's interior can
     * hold later starts whose own matches share the same closing
-    * purchase; skip-to-next emits all of them where q57's
-    * skip-past-last would emit only the earliest. Oracle: pure window
+    * purchase; skip-to-next emits all of them where q57's disjoint
+    * sets leave one open attempt at a time. Oracle: pure window
     * SQL, no recursion — for each view, the FIRST following
     * non-(click|view) row; a match iff that boundary is an in-span
     * purchase (all interior rows are mids by construction, so
     * n_mid = boundary_rn - start_rn - 1). */
   def eventPatternSkipToNext(s: SparkSession, d: String): DataFrame =
     eventPatternOf(Tables.events(s, d),
-      midTypes = Seq("click", "view"), skipToNextRow = true)
+      midTypes = Seq("click", "view"))
+
+  /** The tag-set contract of the batch core and the stream: start and
+    * end non-empty, end disjoint from start∪mid. A start∩mid type tags
+    * 4 (start-or-mid, see [[graft.functions.CepMachine]]). */
+  def requireTagSets(startTypes: Seq[String], midTypes: Seq[String],
+      endTypes: Seq[String]): Unit =
+    require(startTypes.nonEmpty && endTypes.nonEmpty &&
+      endTypes.intersect(startTypes ++ midTypes).isEmpty,
+      "start/end non-empty, end disjoint from start∪mid")
 
   /** Core of [[eventPattern]]; expects (user_id, ts, event_id,
-    * event_type) columns. The pattern is `start mid* end` over
-    * arbitrary event-type sets (defaults = q57's view/click/purchase):
-    * the single-pass exactness argument in [[graft.functions.EventMatches]]
-    * holds for ANY disjoint start/mid/end assignment, because only a
-    * start-tagged row can open a match — rescanning a failed attempt
-    * from its second row meets only mid rows before the current one.
+    * event_type) columns. The pattern is `start mid{minMid,maxMid} end`
+    * over arbitrary event-type sets (defaults = q57's
+    * view/click/purchase), run by [[graft.functions.CepMachine]]:
+    * disjoint sets give q57's non-overlapping matches, a start type
+    * that is also a mid gives q65's overlapping ones.
     */
   def eventPatternOf(events: DataFrame, spanUs: Long = SpanUs,
       startTypes: Seq[String] = Seq("view"),
       midTypes: Seq[String] = Seq("click"),
       endTypes: Seq[String] = Seq("purchase"),
-      minMid: Int = 0, maxMid: Int = Int.MaxValue,
-      skipToNextRow: Boolean = false): DataFrame = {
-    // end stays disjoint from everything; start∩mid (the overlap that
-    // makes matches overlap-capable) is only meaningful — and only
-    // tracked exactly — under skip-to-next-row (see EventMatches)
-    require(startTypes.nonEmpty && endTypes.nonEmpty &&
-      endTypes.intersect(startTypes ++ midTypes).isEmpty &&
-      (skipToNextRow || startTypes.intersect(midTypes).isEmpty),
-      "start/end non-empty, end disjoint from start∪mid; start∩mid needs skipToNextRow")
+      minMid: Int = 0, maxMid: Int = Int.MaxValue): DataFrame = {
+    requireTagSets(startTypes, midTypes, endTypes)
     val midCond =
       if (midTypes.isEmpty) lit(false) else col("event_type").isin(midTypes: _*)
     val startCond = col("event_type").isin(startTypes: _*)
@@ -103,7 +109,7 @@ object Cep {
       .agg(sort_array(collect_list(col("e"))).as("evs"))
       .select(col("user_id"),
         explode(graft.functions.VectorExprs.eventMatches(
-          col("evs"), spanUs, minMid, maxMid, skipToNextRow)).as("m"))
+          col("evs"), spanUs, minMid, maxMid)).as("m"))
       .select(col("user_id"),
         col("m.start_event_id").as("start_event_id"), col("m.start_ts").as("start_ts"),
         col("m.end_event_id").as("end_event_id"), col("m.end_ts").as("end_ts"),

@@ -41,6 +41,21 @@ object EventStream {
       .select(col("window.start").as("ws"), col("event_type"),
         col("n_events"), col("total_value"))
 
+  /** Folds a key's new ticks into its latest row: the greatest
+    * (ts, event_id) wins, n_seen counts every tick. `ticks` is non-empty
+    * whenever `prev` is None. */
+  private def foldLatest(user: Long, prev: Option[Latest], ticks: Iterator[Tick]): Latest = {
+    var best = prev
+    var seen = prev.map(_.n_seen).getOrElse(0L)
+    ticks.foreach { t =>
+      seen += 1
+      val cmp = if (best.isEmpty) 1 else t.ts.compareTo(best.get.ts)
+      if (cmp > 0 || (cmp == 0 && t.event_id > best.get.last_event_id))
+        best = Some(Latest(user, t.ts, t.value, seen, t.event_id))
+    }
+    best.get.copy(n_seen = seen)
+  }
+
   /** Stateful latest-value-per-key (Redis latest-quote analog) via
     * mapGroupsWithState. State per user is O(1) but lives FOREVER unless
     * `idleTimeout` is set: pass Some(duration) on churning key
@@ -65,16 +80,7 @@ object EventStream {
             state.remove()
             out
           } else {
-            val prev = state.getOption
-            var best = prev
-            var seen = prev.map(_.n_seen).getOrElse(0L)
-            ticks.foreach { t =>
-              seen += 1
-              val cmp = if (best.isEmpty) 1 else t.ts.compareTo(best.get.ts)
-              if (cmp > 0 || (cmp == 0 && t.event_id > best.get.last_event_id))
-                best = Some(Latest(user, t.ts, t.value, seen, t.event_id))
-            }
-            val out = best.get.copy(n_seen = seen)
+            val out = foldLatest(user, state.getOption, ticks)
             state.update(out)
             idleTimeout.foreach(state.setTimeoutDuration)
             out
@@ -118,15 +124,7 @@ object EventStream {
     }
     override def handleInputRows(user: Long, ticks: Iterator[Tick],
         tv: org.apache.spark.sql.streaming.TimerValues): Iterator[Latest] = {
-      var best = if (state.exists()) Option(state.get()) else None
-      var seen = best.map(_.n_seen).getOrElse(0L)
-      ticks.foreach { t =>
-        seen += 1
-        val cmp = if (best.isEmpty) 1 else t.ts.compareTo(best.get.ts)
-        if (cmp > 0 || (cmp == 0 && t.event_id > best.get.last_event_id))
-          best = Some(Latest(user, t.ts, t.value, seen, t.event_id))
-      }
-      val out = best.get.copy(n_seen = seen)
+      val out = foldLatest(user, if (state.exists()) Option(state.get()) else None, ticks)
       state.update(out)
       Iterator.single(out)
     }
@@ -254,9 +252,6 @@ object EventStream {
       val tv = vs.filter(_ > tc).minOption.getOrElse(MAX)
       val tp = ps.filter(_ > tv).minOption.getOrElse(MAX)
       minClick.update(tc)
-      // the store rejects EMPTY list writes — a fully-pruned list is a clear
-      def putList(st: org.apache.spark.sql.streaming.ListState[Long], a: Array[Long]): Unit =
-        if (a.isEmpty) st.clear() else st.put(a)
       putList(views, FunnelProcessor.prune(vs, tv, cutoffUs))
       putList(purchases, FunnelProcessor.prune(ps, tp, cutoffUs))
       def opt(x: Long) = if (x == MAX) None else Some(usToTs(x))
@@ -343,6 +338,43 @@ object EventStream {
   case class SessionOut(user_id: Long, session_start: java.sql.Timestamp,
       session_end: java.sql.Timestamp, n_events: Long, closed: Boolean)
   case class SessState(start: Long, end: Long, n: Long) // start/end in epoch µs
+
+  /** A tick buffered by an event-time processor until it [[settle]]s. */
+  trait Buffered { def event_id: Long; def ts_us: Long }
+
+  /** One [[settle]] step: the key's new frontier and cutoff, whether a
+    * flush sentinel arrived, and the settled rows in (ts_us, event_id)
+    * order. */
+  private case class Settled[B](frontier: Long, cutoff: Long, flush: Boolean, rows: Array[B])
+
+  /** The settle step of the event-time processors ([[VertProcessor]],
+    * [[CepProcessor]]): the key's frontier advances to its newest tick
+    * and the cutoff trails it by `latenessUs` (monotone), or jumps past
+    * everything on an `event_type == "flush"` sentinel (batch
+    * end-of-input). Buffered and arriving rows at or behind the PREVIOUS
+    * cutoff arrived over-late and are dropped; the rest settle if they
+    * are at or behind the new cutoff and stay in `buf` otherwise. */
+  private def settle[B <: Buffered : scala.reflect.ClassTag](ticks: Iterator[Tick],
+      buf: org.apache.spark.sql.streaming.ListState[B], frontier: Long, cutoff: Long,
+      latenessUs: Long)(toBuf: Tick => B): Settled[B] = {
+    val evs = ticks.toArray
+    val flush = evs.exists(_.event_type == "flush")
+    val incoming = evs.filter(_.event_type != "flush").map(toBuf)
+    val front = (frontier +: incoming.map(_.ts_us)).max
+    // guard the no-rows-yet underflow
+    val cut =
+      if (flush) Long.MaxValue
+      else if (front == Long.MinValue) Long.MinValue
+      else math.max(front - latenessUs, cutoff)
+    val (ready, stay) = (buf.get().toArray ++ incoming)
+      .filter(_.ts_us > cutoff).partition(_.ts_us <= cut)
+    putList(buf, stay)
+    Settled(front, cut, flush, ready.sortBy(r => (r.ts_us, r.event_id)))
+  }
+
+  /** The state store rejects EMPTY list writes: an empty list is a clear. */
+  private def putList[T](st: org.apache.spark.sql.streaming.ListState[T], a: Array[T]): Unit =
+    if (a.isEmpty) st.clear() else st.put(a)
 
   /** µs-exact Timestamp conversions — getTime() alone is ms and silently
     * truncates the sub-ms part real tick data carries. */
@@ -458,7 +490,7 @@ object EventStream {
 
   case class VertOut(event_id: Long, user_id: Long, ts: java.sql.Timestamp,
       net: Double, o: Double, avg_r: Double)
-  case class VertBuf(event_id: Long, ts_us: Long, value: Double)
+  case class VertBuf(event_id: Long, ts_us: Long, value: Double) extends Buffered
   case class VertPend(event_id: Long, ts_us: Long, net: Double,
       avg_pre: Double, has_pre: Boolean, fol_sum4: Long, fol_cnt: Int)
   case class VertCore(frontier: Long, cutoff: Long, prev_val: Double,
@@ -533,23 +565,11 @@ object EventStream {
 
     override def handleInputRows(user: Long, ticks: Iterator[Tick],
         tv0: org.apache.spark.sql.streaming.TimerValues): Iterator[VertOut] = {
-      val evs = ticks.toArray
-      val isFlush = evs.exists(_.event_type == "flush")
-      val incoming = evs.filter(_.event_type != "flush")
-        .map(t => VertBuf(t.event_id, tsToUs(t.ts), t.value))
       var c = if (core.exists()) core.get()
         else VertCore(Long.MinValue, Long.MinValue, 0.0, has_prev = false,
           Array.empty, Array.empty)
-      val front = (c.frontier +: incoming.map(_.ts_us)).max
-      // cutoff is monotone; guard the no-rows-yet underflow
-      val cut =
-        if (isFlush) Long.MaxValue
-        else if (front == Long.MinValue) Long.MinValue
-        else math.max(front - latenessUs, c.cutoff)
-      // rows at or behind the PREVIOUS cutoff arrived over-late: dropped
-      val live = (buf.get().map(identity).toArray ++ incoming)
-        .filter(_.ts_us > c.cutoff)
-      val (settle, stay) = live.partition(_.ts_us <= cut)
+      val s = settle(ticks, buf, c.frontier, c.cutoff, latenessUs)(
+        t => VertBuf(t.event_id, tsToUs(t.ts), t.value))
       val pq = scala.collection.mutable.ArrayDeque.from(pend.get().map(identity))
       val out = scala.collection.mutable.ArrayBuffer.empty[VertOut]
 
@@ -569,7 +589,7 @@ object EventStream {
         }
       }
 
-      settle.sortBy(r => (r.ts_us, r.event_id)).foreach { r =>
+      s.rows.foreach { r =>
         if (c.has_prev) {
           val net = r.value - c.prev_val
           val avgPre =
@@ -590,16 +610,13 @@ object EventStream {
         }
         c = c.copy(prev_val = r.value, has_prev = true)
       }
-      if (isFlush) {
+      if (s.flush) {
         // batch end-of-input: finalize with however many followers exist
         pq.foreach(finalizeRow)
         pq.clear()
       }
 
-      core.update(c.copy(frontier = front, cutoff = cut))
-      def putList[T](st: org.apache.spark.sql.streaming.ListState[T],
-          a: Array[T]): Unit = if (a.isEmpty) st.clear() else st.put(a)
-      putList(buf, stay)
+      core.update(c.copy(frontier = s.frontier, cutoff = s.cutoff))
       putList(pend, pq.toArray)
       out.iterator
     }
@@ -615,35 +632,28 @@ object EventStream {
         org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Append())
   }
 
-  // ---- q57 CEP streaming twin ---------------------------------------
+  // ---- CEP streaming twin (q57, q64's sets, q65) -------------------
 
   case class CepMatch(user_id: Long, start_event_id: Long,
       start_ts: java.sql.Timestamp, end_event_id: Long,
       end_ts: java.sql.Timestamp, n_mid: Int)
-  case class CepBuf(event_id: Long, ts_us: Long, tag: Int)
-  case class CepCore(frontier: Long, cutoff: Long, started: Boolean,
-      s_ts: Long, s_id: Long, n_mid: Int)
+  case class CepBuf(event_id: Long, ts_us: Long, tag: Int) extends Buffered
+  case class CepAttempt(s_ts: Long, s_id: Long, n_mid: Int)
+  case class CepCore(frontier: Long, cutoff: Long, attempts: Seq[CepAttempt])
 
-  /** Streaming twin of batch q57 ([[graft.operators.Cep.eventPatternOf]]):
-    * the `view click* purchase` CEP automaton run incrementally per
-    * user — the Flink-CEP execution model. Like funnelStream /
-    * verticalsStream, TimeMode.None with a SELF-MANAGED per-key
-    * event-time frontier (Spark's event-time mode would drop mildly
-    * late rows before the processor sees them): arrivals buffer until
-    * they fall `latenessUs` behind the key's own frontier, then settle
-    * through the same transition function
-    * [[graft.functions.EventMatches]] runs, in exact (ts, event_id)
-    * order. A match is emitted exactly once, at the micro-batch its
-    * closing purchase settles in (Append mode). Ticks more than the
-    * lateness behind the frontier are DROPPED (the declared-dead
-    * trade); an `event_type == "flush"` sentinel settles the whole
-    * buffer — batch end-of-input semantics. State per key = one
-    * automaton register + the ticks inside one lateness window.
-    */
+  /** Streaming twin of the batch CEP core
+    * ([[graft.operators.Cep.eventPatternOf]]): the same automaton,
+    * [[graft.functions.CepMachine]], run incrementally per key — the
+    * Flink-CEP execution model. Like verticalsStream it settles through
+    * [[settle]] (TimeMode.None, self-managed per-key event-time frontier,
+    * over-late drops, flush sentinel), so rows reach the machine in
+    * exact (ts, event_id) order. A match is emitted exactly once, at the
+    * micro-batch its closing end row settles in (Append mode). State per
+    * key = the open attempts as restart-stable (s_ts, s_id, n_mid) —
+    * bounded by the start rows inside one span window — + the ticks
+    * inside one lateness window. */
   class CepProcessor(latenessUs: Long, spanUs: Long,
-      startTypes: Set[String] = Set("view"),
-      midTypes: Set[String] = Set("click"),
-      endTypes: Set[String] = Set("purchase"))
+      startTypes: Set[String], midTypes: Set[String], endTypes: Set[String])
       extends org.apache.spark.sql.streaming.StatefulProcessor[Long, Tick, CepMatch] {
     @transient private var core: org.apache.spark.sql.streaming.ValueState[CepCore] = _
     @transient private var buf: org.apache.spark.sql.streaming.ListState[CepBuf] = _
@@ -655,98 +665,7 @@ object EventStream {
       buf = getHandle.getListState[CepBuf]("buf",
         org.apache.spark.sql.Encoders.product[CepBuf], none)
     }
-    private def tagOf(et: String): Int =
-      if (startTypes(et)) 0
-      else if (midTypes(et)) 1
-      else if (endTypes(et)) 2
-      else 3
-    override def handleInputRows(user: Long, ticks: Iterator[Tick],
-        tv0: org.apache.spark.sql.streaming.TimerValues): Iterator[CepMatch] = {
-      val evs = ticks.toArray
-      val isFlush = evs.exists(_.event_type == "flush")
-      val incoming = evs.filter(_.event_type != "flush")
-        .map(t => CepBuf(t.event_id, tsToUs(t.ts), tagOf(t.event_type)))
-      var c = if (core.exists()) core.get()
-        else CepCore(Long.MinValue, Long.MinValue, started = false, 0L, 0L, 0)
-      val front = (c.frontier +: incoming.map(_.ts_us)).max
-      val cut =
-        if (isFlush) Long.MaxValue
-        else if (front == Long.MinValue) Long.MinValue
-        else math.max(front - latenessUs, c.cutoff)
-      // rows at or behind the PREVIOUS cutoff arrived over-late: dropped
-      val live = (buf.get().map(identity).toArray ++ incoming)
-        .filter(_.ts_us > c.cutoff)
-      val (settle, stay) = live.partition(_.ts_us <= cut)
-      val out = scala.collection.mutable.ArrayBuffer.empty[CepMatch]
-      settle.sortBy(r => (r.ts_us, r.event_id)).foreach { r =>
-        // EventMatches' transition function, verbatim
-        val inSpan = c.started && r.ts_us - c.s_ts <= spanUs
-        if (inSpan && r.tag == 2) {
-          out += CepMatch(user, c.s_id, usToTs(c.s_ts), r.event_id,
-            usToTs(r.ts_us), c.n_mid)
-          c = c.copy(started = false)
-        } else if (inSpan && r.tag == 1) {
-          c = c.copy(n_mid = c.n_mid + 1)
-        } else if (r.tag == 0) {
-          c = c.copy(started = true, s_ts = r.ts_us, s_id = r.event_id, n_mid = 0)
-        } else {
-          c = c.copy(started = false)
-        }
-      }
-      core.update(c.copy(frontier = front, cutoff = cut))
-      if (stay.isEmpty) buf.clear() else buf.put(stay)
-      out.iterator
-    }
-  }
-
-  /** See [[CepProcessor]]. Pattern tag sets mirror
-    * [[graft.operators.Cep.eventPatternOf]]'s (same disjointness
-    * contract; defaults = the q57 pattern). */
-  def cepStream(stream: Dataset[Tick],
-      maxLateness: java.time.Duration = java.time.Duration.ofMinutes(10),
-      spanUs: Long = graft.operators.Cep.SpanUs,
-      startTypes: Set[String] = Set("view"),
-      midTypes: Set[String] = Set("click"),
-      endTypes: Set[String] = Set("purchase")): Dataset[CepMatch] = {
-    import stream.sparkSession.implicits._
-    stream.groupByKey(_.user_id)
-      .transformWithState(new CepProcessor(maxLateness.toMillis * 1000L, spanUs,
-          startTypes, midTypes, endTypes),
-        org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Append())
-  }
-
-  // ---- q65 CEP streaming twin (AFTER MATCH SKIP TO NEXT ROW) ---------
-
-  case class CepAttempt(s_ts: Long, s_id: Long, n_mid: Int)
-  case class CepSkipCore(frontier: Long, cutoff: Long, attempts: Seq[CepAttempt])
-
-  /** Streaming twin of batch q65
-    * ([[graft.operators.Cep.eventPatternSkipToNext]]): the
-    * overlapping-match automaton run incrementally per key — the same
-    * buffer-and-settle discipline as [[CepProcessor]] (TimeMode.None,
-    * self-managed per-key event-time frontier, over-late drops, flush
-    * sentinel), but the automaton register is the LIST of open attempts
-    * ([[graft.functions.EventMatches]] skipToNext mode, verbatim): a
-    * start∩mid row (tag 4) advances every open attempt AND opens its
-    * own; an end row closes all in-span attempts, emitting one match
-    * per surviving start in start order; pure starts/others kill all;
-    * overflow/expiry kill per-attempt. State per key = the open-attempt
-    * list (bounded by the start rows inside one span window) + the
-    * ticks inside one lateness window. */
-  class CepSkipProcessor(latenessUs: Long, spanUs: Long,
-      startTypes: Set[String], midTypes: Set[String], endTypes: Set[String],
-      minMid: Int = 0, maxMid: Int = Int.MaxValue)
-      extends org.apache.spark.sql.streaming.StatefulProcessor[Long, Tick, CepMatch] {
-    @transient private var core: org.apache.spark.sql.streaming.ValueState[CepSkipCore] = _
-    @transient private var buf: org.apache.spark.sql.streaming.ListState[CepBuf] = _
-    override def init(outputMode: OutputMode,
-        timeMode: org.apache.spark.sql.streaming.TimeMode): Unit = {
-      val none = org.apache.spark.sql.streaming.TTLConfig.NONE
-      core = getHandle.getValueState[CepSkipCore]("core",
-        org.apache.spark.sql.Encoders.product[CepSkipCore], none)
-      buf = getHandle.getListState[CepBuf]("buf",
-        org.apache.spark.sql.Encoders.product[CepBuf], none)
-    }
+    // the batch core's CASE WHEN (Cep.eventPatternOf), per tick
     private def tagOf(et: String): Int =
       if (startTypes(et) && midTypes(et)) 4
       else if (startTypes(et)) 0
@@ -755,80 +674,36 @@ object EventStream {
       else 3
     override def handleInputRows(user: Long, ticks: Iterator[Tick],
         tv0: org.apache.spark.sql.streaming.TimerValues): Iterator[CepMatch] = {
-      val evs = ticks.toArray
-      val isFlush = evs.exists(_.event_type == "flush")
-      val incoming = evs.filter(_.event_type != "flush")
-        .map(t => CepBuf(t.event_id, tsToUs(t.ts), tagOf(t.event_type)))
       val c = if (core.exists()) core.get()
-        else CepSkipCore(Long.MinValue, Long.MinValue, Seq.empty)
-      val front = (c.frontier +: incoming.map(_.ts_us)).max
-      val cut =
-        if (isFlush) Long.MaxValue
-        else if (front == Long.MinValue) Long.MinValue
-        else math.max(front - latenessUs, c.cutoff)
-      val live = (buf.get().map(identity).toArray ++ incoming)
-        .filter(_.ts_us > c.cutoff)
-      val (settle, stay) = live.partition(_.ts_us <= cut)
+        else CepCore(Long.MinValue, Long.MinValue, Seq.empty)
+      val s = settle(ticks, buf, c.frontier, c.cutoff, latenessUs)(
+        t => CepBuf(t.event_id, tsToUs(t.ts), tagOf(t.event_type)))
       val out = scala.collection.mutable.ArrayBuffer.empty[CepMatch]
-      // EventMatches' skip-to-next transition function in its O(1)/row
-      // form (see graft.functions.EventMatches.OpenAtt): a global mid
-      // counter + per-attempt midAtOpen replace the per-row all-attempts
-      // advance, and both eviction conditions (span expiry, overflow)
-      // pop front-monotonically. The PERSISTED state keeps absolute
-      // n_mid (schema unchanged, restart-compatible): restored attempts
-      // enter the deque as midAtOpen = -n_mid against a counter starting
-      // at 0 — they were appended in s_ts order with monotone
-      // non-increasing n_mid, so midAtOpen still ascends along the deque.
-      var midCount = 0L
-      val open = scala.collection.mutable.ArrayDeque.empty[(Long, Long, Long)]
-      c.attempts.foreach(a => open.append((a.s_ts, a.s_id, -a.n_mid.toLong)))
-      settle.sortBy(r => (r.ts_us, r.event_id)).foreach { r =>
-        while (open.nonEmpty && r.ts_us - open.head._1 > spanUs) open.removeHead()
-        r.tag match {
-          case 2 =>
-            open.foreach { case (sTs, sId, midAtOpen) =>
-              val nMid = midCount - midAtOpen
-              if (nMid >= minMid && nMid <= maxMid)
-                out += CepMatch(user, sId, usToTs(sTs), r.event_id,
-                  usToTs(r.ts_us), nMid.toInt)
-            }
-            open.clear()
-          case 1 =>
-            midCount += 1
-            while (open.nonEmpty && midCount - open.head._3 > maxMid.toLong)
-              open.removeHead()
-          case 0 =>
-            open.clear()
-            open.append((r.ts_us, r.event_id, midCount))
-          case 4 =>
-            midCount += 1
-            while (open.nonEmpty && midCount - open.head._3 > maxMid.toLong)
-              open.removeHead()
-            open.append((r.ts_us, r.event_id, midCount))
-          case _ =>
-            open.clear()
-        }
-      }
-      val kept = open.iterator.map { case (sTs, sId, midAtOpen) =>
-        CepAttempt(sTs, sId, (midCount - midAtOpen).toInt)
-      }.toSeq
-      core.update(CepSkipCore(front, cut, kept))
-      if (stay.isEmpty) buf.clear() else buf.put(stay)
+      val machine = new graft.functions.CepMachine(spanUs)(
+        (sId, sTs, eId, eTs, nMid) =>
+          out += CepMatch(user, sId, usToTs(sTs), eId, usToTs(eTs), nMid))
+      c.attempts.foreach(a => machine.reopen(a.s_ts, a.s_id, a.n_mid))
+      s.rows.foreach(r => machine.step(r.ts_us, r.event_id, r.tag))
+      core.update(CepCore(s.frontier, s.cutoff,
+        machine.openAttempts.map { case (sTs, sId, nMid) => CepAttempt(sTs, sId, nMid) }))
       out.iterator
     }
   }
 
-  /** See [[CepSkipProcessor]]. Defaults = the q65 pattern
-    * (`view (click|view)* purchase`). */
-  def cepSkipToNextStream(stream: Dataset[Tick],
+  /** See [[CepProcessor]]. Tag sets follow
+    * [[graft.operators.Cep.eventPatternOf]]'s contract (checked here, when
+    * the plan is built); defaults = the q57 pattern, and q65's stream is
+    * `cepStream(midTypes = Set("click", "view"))`. */
+  def cepStream(stream: Dataset[Tick],
       maxLateness: java.time.Duration = java.time.Duration.ofMinutes(10),
       spanUs: Long = graft.operators.Cep.SpanUs,
       startTypes: Set[String] = Set("view"),
-      midTypes: Set[String] = Set("click", "view"),
+      midTypes: Set[String] = Set("click"),
       endTypes: Set[String] = Set("purchase")): Dataset[CepMatch] = {
+    graft.operators.Cep.requireTagSets(startTypes.toSeq, midTypes.toSeq, endTypes.toSeq)
     import stream.sparkSession.implicits._
     stream.groupByKey(_.user_id)
-      .transformWithState(new CepSkipProcessor(maxLateness.toMillis * 1000L, spanUs,
+      .transformWithState(new CepProcessor(maxLateness.toMillis * 1000L, spanUs,
           startTypes, midTypes, endTypes),
         org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Append())
   }

@@ -19,9 +19,75 @@ class PropertySpec extends SparkSpec {
     "row", "fast", "slow", "window", "batch", "merge", "scan", "key")
   private val wordArray = Gen.listOfN(30, word).map(_.toArray)
 
-  test("skip-to-next CEP deque equals the quadratic reference on random tag streams") {
+  /** Runs EventMatches (the one CepMachine) over (ts, id, tag) rows. */
+  private def cepMatches(rows: Seq[(Long, Long, Int)], span: Long, minMid: Int,
+      maxMid: Int): Seq[(Long, Long, Long, Long, Int)] = {
     import org.apache.spark.sql.catalyst.InternalRow
     import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+    val in: ArrayData = new GenericArrayData(
+      rows.map { case (t, id, tag) => InternalRow(t, id, tag) }.toArray[Any])
+    val got = graft.functions.EventMatches(
+        org.apache.spark.sql.graftshim.toExpr(lit(1)), span, minMid, maxMid)
+      .nullSafeEval(in).asInstanceOf[ArrayData]
+    (0 until got.numElements()).map { i =>
+      val r = got.getStruct(i, 5)
+      (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getInt(4))
+    }
+  }
+
+  /** Random (span, minMid, maxMid, (ts, id, tag) rows) over the given tags. */
+  private def cepCases(tag: Gen[Int], count: Int): Seq[(Long, Int, Int, Seq[(Long, Long, Int)])] = {
+    val gen = for {
+      n <- Gen.choose(0, 120)
+      span <- Gen.oneOf(1L, 3L, 7L, 20L, 1000L)
+      minMid <- Gen.choose(0, 2)
+      width <- Gen.choose(0, 5)
+      tags <- Gen.listOfN(n, tag)
+      gaps <- Gen.listOfN(n, Gen.choose(0L, 5L)) // zero gaps ⇒ ts ties
+    } yield (span, minMid, minMid + width, tags.zip(gaps))
+    samples(gen, count).map { case (span, mn, mx, evs) =>
+      var ts = 0L
+      (span, mn, mx, evs.zipWithIndex.map { case ((tag, gap), i) =>
+        ts += gap; (ts, i.toLong, tag)
+      })
+    }
+  }
+
+  test("CEP machine on disjoint tag sets equals a single-attempt skip-past-last reference") {
+    // reference: the q57/q64 automaton as declared — ONE attempt at a
+    // time, AFTER MATCH SKIP PAST LAST ROW; a start restarts it, an end
+    // closes it (a match iff the mid count is in bounds), a mid past
+    // maxMid or out of span kills it, any other row kills it
+    def ref(rows: Seq[(Long, Long, Int)], spanUs: Long, minMid: Int,
+        maxMid: Int): Seq[(Long, Long, Long, Long, Int)] = {
+      val out = collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Long, Int)]
+      var started = false
+      var sTs = 0L; var sId = 0L; var nMid = 0
+      for ((ts, id, tag) <- rows) {
+        val inSpan = started && ts - sTs <= spanUs
+        if (inSpan && tag == 2) {
+          if (nMid >= minMid && nMid <= maxMid) out += ((sId, sTs, id, ts, nMid))
+          started = false
+        } else if (inSpan && tag == 1) {
+          nMid += 1
+          if (nMid > maxMid) started = false
+        } else if (tag == 0) {
+          started = true; sTs = ts; sId = id; nMid = 0
+        } else started = false
+      }
+      out.toSeq
+    }
+    var matched = 0
+    cepCases(Gen.frequency(3 -> 0, 4 -> 1, 2 -> 2, 1 -> 3), 400).foreach {
+      case (span, mn, mx, rows) =>
+        val want = ref(rows, span, mn, mx)
+        matched += want.size
+        assert(cepMatches(rows, span, mn, mx) == want, s"span=$span mid=[$mn,$mx] rows=$rows")
+    }
+    assert(matched >= 200, s"fixture rot: only $matched matches across all cases")
+  }
+
+  test("skip-to-next CEP deque equals the quadratic reference on random tag streams") {
     // reference: the per-attempt list advance (the O(span²) formulation
     // the mid-counter deque replaced) — kept as the executable spec of
     // the skip-to-next semantics
@@ -49,31 +115,10 @@ class PropertySpec extends SparkSpec {
       }
       out.toSeq
     }
-    val gen = for {
-      n <- Gen.choose(0, 120)
-      span <- Gen.oneOf(1L, 3L, 7L, 20L, 1000L)
-      minMid <- Gen.choose(0, 2)
-      width <- Gen.choose(0, 5)
-      tags <- Gen.listOfN(n, Gen.frequency(2 -> 0, 3 -> 1, 2 -> 2, 1 -> 3, 3 -> 4))
-      gaps <- Gen.listOfN(n, Gen.choose(0L, 5L)) // zero gaps ⇒ ts ties
-    } yield (span, minMid, minMid + width, tags.zip(gaps))
-    samples(gen, 400).foreach { case (span, mn, mx, evs) =>
-      var ts = 0L
-      val rows = evs.zipWithIndex.map { case ((tag, gap), i) =>
-        ts += gap; (ts, i.toLong, tag)
-      }
-      val in: ArrayData = new GenericArrayData(
-        rows.map { case (t, id, tag) => InternalRow(t, id, tag) }.toArray[Any])
-      val got = graft.functions.EventMatches(
-          org.apache.spark.sql.graftshim.toExpr(lit(1)), span, mn, mx,
-          skipToNext = true)
-        .nullSafeEval(in).asInstanceOf[ArrayData]
-      val gotSeq = (0 until got.numElements()).map { i =>
-        val r = got.getStruct(i, 5)
-        (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getInt(4))
-      }
-      assert(gotSeq == ref(rows, span, mn, mx),
-        s"span=$span mid=[$mn,$mx] rows=$rows")
+    cepCases(Gen.frequency(2 -> 0, 3 -> 1, 2 -> 2, 1 -> 3, 3 -> 4), 400).foreach {
+      case (span, mn, mx, rows) =>
+        assert(cepMatches(rows, span, mn, mx) == ref(rows, span, mn, mx),
+          s"span=$span mid=[$mn,$mx] rows=$rows")
     }
   }
 

@@ -357,6 +357,44 @@ class Round12eSpec extends SparkSpec {
     }
   }
 
+  test("cepStream checks and tags its sets like the batch core: q65's sets == eventPatternOf") {
+    withRocksDb {
+      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+      import spark.implicits._
+      implicit val sc = spark.sqlContext
+      def t(m: Long) = new java.sql.Timestamp(m * 60000L)
+      // views are starts AND mids: u1 holds two overlapping matches on
+      // one purchase, u2 an interior view that opens its own match
+      val ticks = Seq(
+        (1L, 0L, "view"), (1L, 1L, "click"), (1L, 2L, "view"), (1L, 3L, "purchase"),
+        (2L, 0L, "view"), (2L, 1L, "view"), (2L, 2L, "click"), (2L, 3L, "purchase"),
+        (2L, 4L, "view"), (2L, 5L, "error"), (2L, 6L, "purchase"))
+        .zipWithIndex.map { case ((u, m, et), i) =>
+          graft.streaming.EventStream.Tick(i.toLong, t(m), u, et, 0.0) }
+      val mids = Set("click", "view")
+      val input = MemoryStream[graft.streaming.EventStream.Tick]
+      val q = graft.streaming.EventStream.cepStream(input.toDS(),
+          java.time.Duration.ofDays(3650), midTypes = mids).toDF()
+        .writeStream.outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
+        .format("memory").queryName("cep_q65_sets").start()
+      input.addData(ticks.reverse ++ flushTicks(ticks)); q.processAllAvailable()
+      q.stop()
+      val want = graft.operators.Cep.eventPatternOf(
+          ticks.map(k => (k.user_id, k.ts, k.event_id, k.event_type))
+            .toDF("user_id", "ts", "event_id", "event_type"),
+          midTypes = mids.toSeq).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(3), r.getInt(5))).toSeq
+      assert(want == Seq((1L, 0L, 3L, 2), (1L, 2L, 3L, 0), (2L, 4L, 7L, 2), (2L, 5L, 7L, 1)),
+        s"batch fixture drifted: $want")
+      assert(collectMatches("cep_q65_sets") == want)
+      // an end type that is also a mid fails when the plan is built
+      intercept[IllegalArgumentException] {
+        graft.streaming.EventStream.cepStream(input.toDS(),
+          midTypes = Set("click", "purchase"))
+      }
+    }
+  }
+
   test("q57 CEP: event_matches is reachable from plain spark.sql") {
     Graft.install(spark)
     Tables.events(spark, sf).createOrReplaceTempView("ev_sql")

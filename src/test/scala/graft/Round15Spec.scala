@@ -61,7 +61,7 @@ class Round15Spec extends SparkSpec {
       .zipWithIndex.map { case ((u, m, t), i) => (u, ts(m), i.toLong, t) }
       .toDF("user_id", "ts", "event_id", "event_type")
     val got = graft.operators.Cep.eventPatternOf(rows,
-        midTypes = Seq("click", "view"), skipToNextRow = true)
+        midTypes = Seq("click", "view"))
       .select("user_id", "start_ts", "end_ts", "n_mid")
       .collect().map(r => (r.getLong(0), r.getTimestamp(1).getTime / 60000L,
         r.getTimestamp(2).getTime / 60000L, r.getInt(3))).toSeq
@@ -70,21 +70,15 @@ class Round15Spec extends SparkSpec {
       (2L, 2L, 3L, 0),
       (3L, 0L, 2L, 1), (3L, 1L, 2L, 0)), s"got $got")
 
-    // degenerate pin: with DISJOINT sets skip-to-next has one open
-    // attempt and must equal SKIP PAST LAST ROW exactly (real corpus)
-    val ev = Tables.events(spark, sf)
-    val pastLast = graft.operators.Cep.eventPatternOf(ev)
-    val skipNext = graft.operators.Cep.eventPatternOf(ev, skipToNextRow = true)
-    assert(pastLast.exceptAll(skipNext).count() == 0 &&
-      skipNext.exceptAll(pastLast).count() == 0)
-
-    // overlap sets without skip-to-next must be rejected loudly
-    intercept[IllegalArgumentException] {
-      graft.operators.Cep.eventPatternOf(ev, midTypes = Seq("click", "view"))
-    }
+    // the tag sets alone select q65: overlap sets through the core equal
+    // the registered entry on the real corpus
+    val overlap = graft.operators.Cep.eventPatternOf(Tables.events(spark, sf),
+      midTypes = Seq("click", "view"))
+    val q65 = graft.operators.Cep.eventPatternSkipToNext(spark, sf)
+    assert(overlap.exceptAll(q65).count() == 0 && q65.exceptAll(overlap).count() == 0)
   }
 
-  test("cepSkipToNextStream: arbitrary arrival order + flush == batch q65 matches") {
+  test("cepStream with q65's sets: arbitrary arrival order + flush == batch q65 matches") {
     val k = "spark.sql.streaming.stateStore.providerClass"
     val prev = spark.conf.getOption(k)
     spark.conf.set(k,
@@ -103,8 +97,9 @@ class Round15Spec extends SparkSpec {
         graft.streaming.EventStream.Tick(-1L,
           new java.sql.Timestamp(4102444800000L), u, "flush", 0.0))
       val input = MemoryStream[graft.streaming.EventStream.Tick]
-      val q = graft.streaming.EventStream.cepSkipToNextStream(
-          input.toDS(), java.time.Duration.ofDays(3650)).toDF()
+      val q = graft.streaming.EventStream.cepStream(
+          input.toDS(), java.time.Duration.ofDays(3650),
+          midTypes = Set("click", "view")).toDF()
         .writeStream.outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
         .format("memory").queryName("cep_skip").start()
       Seq(ticks.take(ticks.size / 2), ticks.drop(ticks.size / 2), flush)

@@ -10,23 +10,24 @@ import org.scalacheck.rng.Seed
 import graft.streaming.EventStream
 
 /** Round 17: randomized differential + restart discipline for the
-  * STREAMING q65 twin (CepSkipProcessor), extending the batch deque's
-  * 400-case PropertySpec to the stateful path: random tag streams,
-  * micro-batch splits, and one mid-stream stop/restart from the
-  * checkpoint — output must equal batch `eventPatternOf(skipToNextRow)`
-  * exactly. Two arrival regimes exercise the two state legs:
+  * STREAMING CEP twin (CepProcessor) with q65's overlap sets, extending
+  * the batch machine's 400-case PropertySpec to the stateful path:
+  * random tag streams, micro-batch splits, and one mid-stream
+  * stop/restart from the checkpoint — output must equal batch
+  * `eventPatternOf` with the same sets exactly. Two arrival regimes
+  * exercise the two state legs:
   *   (a) shuffled arrival + huge lateness: rows ride the CepBuf list
   *       across batches AND the restart, settling only at flush;
   *   (b) in-order arrival + zero lateness: every batch settles
-  *       immediately, so OPEN ATTEMPTS persist in CepSkipCore across
-  *       the restart (the midAtOpen = -n_mid restore leg).
+  *       immediately, so OPEN ATTEMPTS persist in CepCore across
+  *       the restart (the CepMachine.reopen leg).
   */
 class Round17Spec extends SparkSpec {
 
   private def samples[T](g: Gen[T], n: Int): Seq[T] =
     (0 until n).flatMap(i => g.apply(Gen.Parameters.default, Seed(900L + i)))
 
-  test("cepSkipToNextStream: random streams + micro-batch splits + restart == batch") {
+  test("cepStream with q65's sets: random streams + micro-batch splits + restart == batch") {
     val k = "spark.sql.streaming.stateStore.providerClass"
     val prev = spark.conf.getOption(k)
     spark.conf.set(k,
@@ -57,8 +58,7 @@ class Round17Spec extends SparkSpec {
           .map(t => (t.user_id, t.ts, t.event_id, t.event_type))
           .toDF("user_id", "ts", "event_id", "event_type")
         val want = operators.Cep.eventPatternOf(batchDf,
-            spanUs = spanMs * 1000L, midTypes = Seq("click", "view"),
-            skipToNextRow = true)
+            spanUs = spanMs * 1000L, midTypes = Seq("click", "view"))
           .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(3), r.getInt(5)))
           .sortBy(m => (m._1, m._2, m._3)).toSeq
 
@@ -79,10 +79,10 @@ class Round17Spec extends SparkSpec {
         implicit val sc = spark.sqlContext
         val input = MemoryStream[EventStream.Tick]
         def start() = EventStream
-          .cepSkipToNextStream(input.toDS(),
+          .cepStream(input.toDS(),
             maxLateness = if (ordered) java.time.Duration.ZERO
               else java.time.Duration.ofDays(3650),
-            spanUs = spanMs * 1000L)
+            spanUs = spanMs * 1000L, midTypes = Set("click", "view"))
           .toDF()
           .writeStream.outputMode(OutputMode.Append)
           .option("checkpointLocation", ckpt)

@@ -10,11 +10,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * (graft.sources.Sinks.unseen), one layout marker
   * (graft.ops.Artifacts), one running-sum rule
   * (graft.operators.Silver.rangedRunningSum) and one connected-components
-  * operator (graft.operators.Dedup.connectedComponents). A fifth main, a
-  * second `SparkSession.builder`, an operator that picks its own
-  * reliable cut or checkpoint dir, a hand-rolled pruned guard, a
-  * hand-written `_layout`, a second range layout or a second CC variant
-  * fails here, before it can drift. */
+  * operator (graft.operators.Dedup.connectedComponents) and one CEP
+  * automaton (graft.functions.CepMachine, one CEP stream processor). A
+  * fifth main, a second `SparkSession.builder`, an operator that picks
+  * its own reliable cut or checkpoint dir, a hand-rolled pruned guard, a
+  * hand-written `_layout`, a second range layout, a second CC variant
+  * or a CEP mode flag fails here, before it can drift. */
 class SourceGuardSpec extends AnyFunSuite {
 
   private val root = java.nio.file.Paths.get("src/main/scala")
@@ -89,5 +90,16 @@ class SourceGuardSpec extends AnyFunSuite {
       "maxIter"))((_, _) => false)
     assert(knobs.isEmpty, "label components with Dedup.connectedComponents(pairs):\n" +
       knobs.mkString("\n"))
+  }
+
+  test("one CEP automaton: CepMachine in batch and stream, one CEP stream processor") {
+    val modes = offenders(Seq("skipToNext", "skipToNextRow", "evalPastLast", "CepSkip",
+      "cepSkipToNextStream"))((_, _) => false)
+    assert(modes.isEmpty, "the tag sets pick the CEP mode; run graft.functions.CepMachine:\n" +
+      modes.mkString("\n"))
+    val procs = sources.flatMap { case (f, text) =>
+      Seq.fill(text.split("StatefulProcessor\\[Long, Tick, CepMatch\\]", -1).length - 1)(f) }
+    assert(procs == Seq("graft/streaming/EventStream.scala"),
+      "one CEP stream processor:\n" + procs.mkString("\n"))
   }
 }

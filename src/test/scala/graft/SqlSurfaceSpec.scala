@@ -272,6 +272,19 @@ class SqlSurfaceSpec extends SparkSpec {
       s"""SELECT * FROM event_pattern_skip_next('g_events',
          |  ${operators.Cep.SpanUs}, 'view', 'click,view', 'purchase')""".stripMargin)
     assert(canon(explicit) == canon(viaSql))
+    // one builder: the TVFs differ only in default mids and arities
+    val viaPattern = spark.sql(
+      s"""SELECT * FROM event_pattern('g_events',
+         |  ${operators.Cep.SpanUs}, 'view', 'click,view', 'purchase')""".stripMargin)
+    assert(canon(viaPattern) == canon(viaSql))
+    val e7 = intercept[Exception](spark.sql(
+      s"""SELECT * FROM event_pattern_skip_next('g_events',
+         |  ${operators.Cep.SpanUs}, 'view', 'click', 'purchase', 0, 2)""".stripMargin).collect())
+    assert(e7.getMessage.contains("event_pattern_skip_next") &&
+      e7.getMessage.contains("takes 1, 2 or 5 args, got 7"), e7.getMessage)
+    val e3 = intercept[Exception](
+      spark.sql("SELECT * FROM event_pattern('g_events', 1, 'view')").collect())
+    assert(e3.getMessage.contains("takes 1, 2, 5 or 7 args, got 3"), e3.getMessage)
   }
 
   test("TVF argument errors are caught with clear messages") {

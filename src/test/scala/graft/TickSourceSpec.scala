@@ -157,8 +157,8 @@ class TickSourceSpec extends SparkSpec {
         q.stop()
       }
       // first run sees half the stream; the restart extends the range —
-      // matches STRADDLING the 10000 boundary exist iff the automaton
-      // register survived the restart
+      // matches STRADDLING the 10000 boundary exist iff the machine's
+      // open attempts (CepCore.attempts) survived the restart
       run(10000)
       run(20000)
       val got = spark.read.parquet(s"$base/out").collect()
